@@ -6,11 +6,22 @@ Mirrors the public API of /root/reference/local_db.py:11 (`add`,
 users can port call sites 1:1, while every method compiles to a declarative
 DataFrame plan.
 
-State: one `documents` DataFrame (doc_id, text, embedding, meta columns)
-plus derived BM25 stats — the Spark analogue of the reference's parallel
-lists (local_db.py:35-38). `add` is unionByName + stats invalidation instead
-of the reference's full-rebuild-per-add (README.md:152); persistence is
-parquet + a JSON manifest instead of pickle sniffing (local_db.py:210-265).
+State: one materialized `documents` corpus (doc_id, text, embedding, meta
+columns), at most one set of derived BM25 stats and, on the graph tier,
+one materialized graph — the Spark analogue of the reference's parallel
+lists (local_db.py:35-38). Every mutation (`attach`/`load`, `add`,
+`merge`, `delete`, `update`) builds its successor from the current
+corpus, materializes it as an eager local checkpoint and releases the
+corpus, stats and graph it supersedes (`session.materialize`). Reads
+therefore scan one in-memory relation whose plan size stays constant
+however many adds came before, instead of re-running a growing union of
+every add (README.md:152's full-rebuild-per-add is avoided too: stats
+rebuild lazily). Local checkpoints have no lineage: if an executor holding
+corpus blocks is lost, reads fail rather than recompute — `save` is the
+durable form. A DataFrame handed out by the facade
+(`query_metadata(as_dataframe=True)`) is valid until the next mutation.
+Persistence is parquet + a JSON manifest instead of pickle sniffing
+(local_db.py:210-265).
 
 index_type: 'flat' → exact brute-force (default; the only hash-checkable
 path, mirroring test_local_db.py:155-157's "flat is exact" stance);
@@ -38,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from homemade_vector_db_spark.operators import bm25, hybrid, knn
+from homemade_vector_db_spark.session import materialize, release
 
 
 def _clamp_m(pq_code_size: int, dim: int) -> int:
@@ -155,11 +167,27 @@ class VectorDatabase:
             ]
         )
         new = self.spark.createDataFrame(rows, schema)
-        self._df = new if self._df is None else self._df.unionByName(new)
+        self._set_corpus(new if self._df is None else self._df.unionByName(new))
         self._n += len(rows)
         self._next_id = start + len(rows)
-        self._stats = None  # derived state invalidated, rebuilt lazily
         self._maintain_index_on_append(new)
+
+    def _set_corpus(self, df: DataFrame) -> None:
+        """The one way the corpus changes: materialize `df` (which may
+        read the current corpus), release the corpus it supersedes and
+        the BM25 stats derived from it (rebuilt lazily)."""
+        self._df = materialize(df, supersedes=self._df)
+        if self._stats is not None:
+            self._stats.unpersist()
+            self._stats = None
+
+    def _drop_index(self) -> None:
+        """Forget the ANN index, releasing the graph tier's graph."""
+        from homemade_vector_db_spark.operators import nsw as nswmod
+
+        if isinstance(self._ann_index, nswmod.NSWIndex):
+            release(self._ann_index.graph)
+        self._ann_index = None
 
     def _maintain_index_on_append(self, new: DataFrame) -> None:
         """Per-tier incremental index maintenance for an appended row
@@ -222,7 +250,7 @@ class VectorDatabase:
                     idx, rows_per_shard=idx.rows_per_shard
                 )
         else:
-            self._ann_index = None
+            self._drop_index()
 
     def _maintain_index_on_delete(
         self, id_list: "list[int]", for_update: bool = False
@@ -292,7 +320,7 @@ class VectorDatabase:
 
             self._ann_index = nswmod.nsw_delete(idx, id_list)
         else:
-            self._ann_index = None
+            self._drop_index()
 
     def merge(self, other: "VectorDatabase") -> None:
         """Absorb another database into this one — the capability a
@@ -314,7 +342,8 @@ class VectorDatabase:
           add-after-train maintenance as `add` (frozen-geometry encode
           for IVF/SQ/BQ, incremental graph insert + auto-rebalance for
           the graph tier), so a trained index never silently drops the
-          merged rows.
+          merged rows. The shifted block is materialized once, so
+          neither the corpus nor the index reads `other` again.
         `other` is not mutated. Self-merge is rejected (the id remap
         would double-count the high-water mark mid-plan)."""
         if other is self:
@@ -330,17 +359,15 @@ class VectorDatabase:
             if "meta" in odf.columns
             else F.create_map().cast("map<string,string>")
         )
-        new = odf.select(
+        new = materialize(odf.select(
             (F.col(other.id_col).cast("long") + offset).alias(self.id_col),
             F.col(other.text_col).alias(self.text_col),
             F.col(other.vec_col).alias(self.vec_col),
             meta_col.alias("meta"),
-        )
-        self._df = new if self._df is None else self._df.unionByName(new)
-        n_other = len(other)
-        self._n += n_other
+        ))
+        self._set_corpus(new if self._df is None else self._df.unionByName(new))
+        self._n += len(other)
         self._next_id = offset + other._ensure_next_id()
-        self._stats = None
         self._maintain_index_on_append(new)
 
     def delete(self, ids: Sequence[int]) -> int:
@@ -355,12 +382,10 @@ class VectorDatabase:
         Returns the number of rows removed."""
         df = self._require_df()
         id_list = [int(i) for i in ids]
-        kept = df.where(~F.col(self.id_col).isin(id_list))
-        n_kept = kept.count()
+        self._set_corpus(df.where(~F.col(self.id_col).isin(id_list)))
+        n_kept = self._df.count()
         removed = self._n - n_kept
-        self._df = kept
         self._n = n_kept
-        self._stats = None
         # round 11 (VERDICT r10 Next #7): code tiers maintain their
         # index incrementally on delete instead of a full rebuild
         self._maintain_index_on_delete(id_list)
@@ -419,8 +444,7 @@ class VectorDatabase:
         )
         replacement = self.spark.createDataFrame(rows, schema)
         kept = df.where(~F.col(self.id_col).isin(id_list))
-        self._df = kept.unionByName(replacement)
-        self._stats = None
+        self._set_corpus(kept.unionByName(replacement))
         # round 11 (VERDICT r10 Next #7): update = incremental delete of
         # the old codes + add-after-train encode of the replacements —
         # the code tiers never rebuild; the graph tier rebuilds lazily
@@ -431,12 +455,21 @@ class VectorDatabase:
         return len(rows)
 
     def attach(self, df: DataFrame, n: int | None = None) -> "VectorDatabase":
-        """Wrap an existing documents DataFrame (bulk path — preferred at scale)."""
-        self._df = df
-        self._n = n if n is not None else df.count()
-        self._stats = None
-        self._ann_index = None
-        self._next_id = None  # unknown ids in attached df; computed on demand
+        """Wrap an existing documents DataFrame (bulk path — preferred at
+        scale). `df` is materialized once, so reads never re-run its plan;
+        without `n`, the row count and the id high-water mark come from
+        one aggregate over the materialized corpus."""
+        self._drop_index()
+        self._set_corpus(df)
+        if n is None:
+            row = self._df.agg(
+                F.count(F.lit(1)).alias("n"), F.max(self.id_col).alias("m")
+            ).first()
+            self._n = int(row["n"])
+            self._next_id = int(row["m"]) + 1 if row["m"] is not None else 0
+        else:
+            self._n = n
+            self._next_id = None  # computed on demand (load sets it)
         return self
 
     def _ensure_next_id(self) -> int:
@@ -525,12 +558,16 @@ class VectorDatabase:
                     self._df, id_col=self.id_col, vec_col=self.vec_col
                 )
             elif self.index_type == "nsw":
-                # reference hnsw kwargs map 1:1 (local_db.py:41-47)
-                self._ann_index = nswmod.build_nsw(
+                # reference hnsw kwargs map 1:1 (local_db.py:41-47); the
+                # graph is materialized, so it outlives the corpus it
+                # was built from
+                idx = nswmod.build_nsw(
                     self._df, id_col=self.id_col, vec_col=self.vec_col,
                     m=self.M, ef_construction=self.ef_construction,
-                    rows_per_shard=self._nsw_rows_per_shard,
+                    rows_per_shard=self._nsw_rows_per_shard, cache=False,
                 )
+                idx.graph = materialize(idx.graph)
+                self._ann_index = idx
             elif self.index_type == "sq8":
                 from homemade_vector_db_spark.operators import sq as sqmod
 
@@ -688,8 +725,9 @@ class VectorDatabase:
         """local_db.py:276-321 incl. conditions-shadows-filter_func and
         positional top_k. Empty db → []. With ``as_dataframe=True``
         returns the sorted id DataFrame without collecting (the
-        billion-row-safe form); the default list form refuses to collect
-        more than UNBOUNDED_COLLECT_CAP ids."""
+        billion-row-safe form; it reads the current corpus, so consume
+        it before the next mutation); the default list form refuses to
+        collect more than UNBOUNDED_COLLECT_CAP ids."""
         if self._df is None or self._n == 0:
             return self.spark.createDataFrame(
                 [], f"{self.id_col} long"

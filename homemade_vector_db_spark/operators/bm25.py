@@ -64,6 +64,11 @@ class BM25Stats:
         self.corpus_stats.cache()
         return self
 
+    def unpersist(self) -> None:
+        """Release what `cache` holds (a no-op for uncached relations)."""
+        for df in (self.postings, self.doc_len, self.term_stats, self.corpus_stats):
+            df.unpersist()
+
     def scalars(self) -> "tuple[float, float]":
         """(N, avgdl) as Python floats, collected once. Two scalars per
         corpus: inlining them as literals saves a broadcast-exchange job

@@ -46,6 +46,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from homemade_vector_db_spark.session import materialize
+
 _M64 = (1 << 64) - 1
 _LEVEL_CAP = 12
 
@@ -498,10 +500,7 @@ def nsw_delete(
     )
     g2 = g.withColumn("deleted", F.col("id").isin(id_list) | prior)
     if cache:
-        g2 = g2.persist()
-        g2.count()
-        if index.graph.is_cached:
-            index.graph.unpersist()
+        g2 = materialize(g2, supersedes=g)
     return dataclasses.replace(index, graph=g2)
 
 
@@ -638,14 +637,10 @@ def nsw_add(
         .unionByName(index.graph.where(~F.col("shard").isin(touched)))
     )
     if cache:
-        # Materialize the successor BEFORE releasing the superseded
-        # graph (the new plan reads it), then unpersist — otherwise a
-        # long add stream accumulates one orphaned cached graph per
-        # batch in executor storage (ADVICE r4).
-        graph = graph.persist()
-        graph.count()
-        if index.graph.is_cached:
-            index.graph.unpersist()
+        # the successor is materialized before the superseded graph is
+        # released (its plan reads it): a long add stream keeps one graph
+        # in executor storage and a constant-size read plan
+        graph = materialize(graph, supersedes=index.graph)
     return NSWIndex(
         graph,
         index.id_col,
@@ -687,12 +682,11 @@ def nsw_rebalance(
         m=index.m,
         ef_construction=index.ef_construction,
         rows_per_shard=rows_per_shard,
-        cache=cache,
+        cache=False,
     )
-    if cache and index.graph.is_cached:
-        # same supersede discipline as nsw_add: materialize, then free
-        rebuilt.graph.count()
-        index.graph.unpersist()
+    if cache:
+        # same supersede discipline as nsw_add
+        rebuilt.graph = materialize(rebuilt.graph, supersedes=index.graph)
     return rebuilt
 
 

@@ -87,3 +87,41 @@ def release_transient() -> int:
         except Exception:
             pass  # session already stopped — nothing to release
     return n
+
+
+# --------------------------------------------------------------------------
+# Materialize-and-supersede. Long-lived state that every mutation derives
+# from its predecessor (the facade's corpus, the HNSW graph) is held as an
+# eager local checkpoint: one RDD scan stored MEMORY_AND_DISK, so a read's
+# plan stays the same size however many mutations came before, and no read
+# re-runs the mutation history. A persist() would keep the data but not
+# the plan size. Two consequences callers must respect:
+# - a local checkpoint has no lineage: blocks lost with an executor cannot
+#   be recomputed (the read fails loudly), so this is session state, not
+#   durable state — `save` is the durable form;
+# - the superseded frame is released for good: reading it afterwards
+#   fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
+
+
+def materialize(df, supersedes=None):
+    """Eagerly local-checkpoint `df`, then release `supersedes` (the frame
+    it replaces, which `df` may read). The result reports `is_cached`
+    like a persisted frame, so `release` can tell it apart."""
+    out = df.localCheckpoint(eager=True)
+    out.is_cached = True
+    if supersedes is not None:
+        release(supersedes)
+    return out
+
+
+def release(df) -> None:
+    """Free the executor storage behind a persisted or materialized frame;
+    a frame that holds none (a plain parquet read) is left alone."""
+    if not df.is_cached:
+        return
+    df.unpersist()
+    plan = df._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        # a local checkpoint's blocks belong to its RDD, not the cache
+        # manager, so unpersist() alone leaves them in storage
+        plan.rdd().unpersist(True)

@@ -49,6 +49,19 @@ def dedup_exact_stream(
     )
 
 
+def _has_committed_batch(root: str) -> bool:
+    """True when `root` holds a `batch=<id>` dir whose write committed
+    (Spark's `_SUCCESS` marker). Local-filesystem paths, like the other
+    batch-dir scans in this package."""
+    if not os.path.isdir(root):
+        return False
+    return any(
+        d.startswith("batch=")
+        and os.path.exists(os.path.join(root, d, "_SUCCESS"))
+        for d in os.listdir(root)
+    )
+
+
 class IncrementalNearDup:
     """Streaming near-dup gate: per micro-batch, drop documents whose
     MinHash band buckets collide with state (or with an earlier doc in
@@ -77,15 +90,17 @@ class IncrementalNearDup:
     def _state(self, exclude_batch: int) -> DataFrame | None:
         """Band buckets from every batch EXCEPT `exclude_batch`: a replayed
         micro-batch must not collide with the buckets its own previous
-        attempt wrote (partition pruning on the batch dir, not a scan)."""
-        try:
-            return (
-                self.spark.read.parquet(self.buckets_path)
-                .where(F.col("batch").cast("string") != str(exclude_batch))
-                .drop("batch")
-            )
-        except Exception:
+        attempt wrote (partition pruning on the batch dir, not a scan).
+        None only when no batch has committed state yet; state that exists
+        but cannot be read raises — treating it as "first batch" would
+        admit duplicates silently."""
+        if not _has_committed_batch(self.buckets_path):
             return None  # first batch: no state yet
+        return (
+            self.spark.read.parquet(self.buckets_path)
+            .where(F.col("batch").cast("string") != str(exclude_batch))
+            .drop("batch")
+        )
 
     def ingest_batch(self, batch: DataFrame, batch_id: int | None = None) -> None:
         from homemade_vector_db_spark.operators import dedup as bdedup

@@ -34,3 +34,11 @@ def spark():
     s = get_spark(app_name="hvdb-tests", cpus=8, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def stored_rdds(spark):
+    """Callable returning the ids of the RDDs that hold blocks in
+    executor storage — persisted frames and local checkpoints alike."""
+    sc = spark.sparkContext._jsc.sc()
+    return lambda: {info.id() for info in sc.getRDDStorageInfo()}

@@ -400,11 +400,12 @@ def test_nsw_rebalance_after_growth(spark, embs, qvec):
     idx = nsw.build_nsw(embs.where(F.col("vec_id") < 100), rows_per_shard=100)
     grown = nsw.nsw_add(idx, embs.where(F.col("vec_id") >= 100))
     assert grown.shard_count() == idx.shard_count()  # adds never reshard
+    # read before rebalancing: rebalance releases the graph it supersedes
+    lv_a = {r.id: r.level for r in grown.graph.select("id", "level").collect()}
     reb = nsw.nsw_rebalance(grown, rows_per_shard=100)
     assert reb.shard_count() == 5  # 500 rows / 100
     assert reb.graph.count() == 500
     # levels invariant under resharding
-    lv_a = {r.id: r.level for r in grown.graph.select("id", "level").collect()}
     lv_b = {r.id: r.level for r in reb.graph.select("id", "level").collect()}
     assert lv_a == lv_b
     exact = [r.vec_id for r in knn_exact(embs, qvec, k=10, dim=64).collect()]
@@ -433,21 +434,26 @@ def test_nsw_add_refuses_unknown_shard_count(spark, embs):
     nsw.nsw_add(repaired, one)  # no raise
 
 
-def test_nsw_add_unpersists_superseded_graph(spark, embs):
-    """A long add stream must not accumulate orphaned cached graphs:
-    nsw_add materializes the successor then releases its input
-    (ADVICE r4)."""
+def test_nsw_add_unpersists_superseded_graph(spark, embs, stored_rdds):
+    """A long add stream must not accumulate orphaned graphs in executor
+    storage: nsw_add materializes the successor then releases its input
+    (ADVICE r4). Counted from storage itself, because a local checkpoint
+    holds blocks without the `persist()` flag."""
     from homemade_vector_db_spark.operators import nsw
 
+    embs.count()  # the fixture's own cache is not part of the count
+    base = stored_rdds()
     idx = nsw.build_nsw(embs.where(F.col("vec_id") < 300), rows_per_shard=150)
-    assert idx.graph.is_cached
     step1 = nsw.nsw_add(idx, embs.where(F.col("vec_id") == 301))
-    assert step1.graph.is_cached and not idx.graph.is_cached
+    assert len(stored_rdds() - base) == 1
     step2 = nsw.nsw_add(step1, embs.where(F.col("vec_id") == 302))
-    assert step2.graph.is_cached and not step1.graph.is_cached
+    assert len(stored_rdds() - base) == 1
     # rebalance follows the same supersede discipline
     reb = nsw.nsw_rebalance(step2, rows_per_shard=150)
-    assert reb.graph.is_cached and not step2.graph.is_cached
+    assert stored_rdds() - base == {
+        reb.graph._jdf.queryExecution().logical().rdd().id()
+    }
+    assert reb.graph.count() == 302
 
 
 def test_db_add_stream_triggers_rebalance(spark):
@@ -562,11 +568,13 @@ def test_nsw_mark_delete_and_gc(spark, embs, qvec):
     assert n_marked == len(dead)
 
     # rebalance = GC: tombstones physically dropped, search unchanged
+    # (idx3 is counted first: rebalance releases the graph it supersedes)
+    n_idx3 = idx3.graph.count()
     idx4 = nsw.nsw_rebalance(idx3, rows_per_shard=150)
     assert "deleted" not in [c for c in idx4.graph.columns] or (
         idx4.graph.where("deleted").count() == 0
     )
-    assert idx4.graph.count() == idx3.graph.count() - len(dead)
+    assert idx4.graph.count() == n_idx3 - len(dead)
     gc = [r.vec_id for r in
           nsw.nsw_search(idx4, qvec, k=10, ef_search=60).collect()]
     assert not set(dead) & set(gc)

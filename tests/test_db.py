@@ -677,6 +677,9 @@ def test_merge_maintains_trained_ivf_index(spark):
     target = [0.99, -0.99, 0.99, -0.99]
     b.add(["merged needle"], [target])
     a.merge(b)
+    # a later mutation of `other` releases its corpus; the merged index
+    # must not read it
+    b.add(["later doc"], [[0.0, 0.0, 0.0, 0.0]])
     # the trained index absorbed the shifted block: the needle's id (12)
     # must surface for its own vector through the IVF path
     assert a.query_vector(target, top_k=1) == [12]
@@ -709,3 +712,80 @@ def test_ivfpq_tier_end_to_end(spark, tmp_path):
     assert loaded.index_type == "ivfpq"
     assert loaded._ann_index is not None
     assert loaded.query_vector(q, top_k=3) == db.query_vector(q, top_k=3)
+
+
+def _rdd_id(df) -> int:
+    """Id of the RDD behind a materialized (local-checkpointed) frame."""
+    return df._jdf.queryExecution().logical().rdd().id()
+
+
+def _batch(rng, n, dim=4):
+    words = ["alpha", "beta", "gamma", "delta", "omega", "sigma"]
+    docs = [" ".join(rng.choice(words) for _ in range(5)) for _ in range(n)]
+    return docs, [[rng.random() for _ in range(dim)] for _ in range(n)]
+
+
+def test_facade_storage_constant_across_add_cycles(spark, stored_rdds):
+    """Each add supersedes the corpus, the graph and the BM25 stats: over
+    add + query cycles executor storage holds exactly one corpus, one
+    graph and at most one stats set (four cached relations), instead of
+    one more stats set per cycle."""
+    import random
+
+    rng = random.Random(5)
+    base = stored_rdds()
+    db = VectorDatabase(spark, dim=4, index_type="hnsw")
+    db.add(*_batch(rng, 12))
+    q = [0.5, 0.5, 0.5, 0.5]
+    db.query_vector(q, top_k=3)  # builds the graph
+    sizes = []
+    for _ in range(3):
+        db.add(*_batch(rng, 4))
+        assert db.query_text("alpha gamma", top_k=3)
+        assert db.query_vector(q, top_k=3)
+        sizes.append(len(stored_rdds() - base))
+    assert sizes[0] == sizes[1] == sizes[2]
+    held = stored_rdds() - base
+    corpus, graph = _rdd_id(db._df), _rdd_id(db._ann_index.graph)
+    assert {corpus, graph} <= held
+    assert len(held - {corpus, graph}) <= 4
+
+
+def _last_plan_nodes(monkeypatch, call) -> int:
+    """Analysed-plan node count of the last DataFrame `call` collects."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    seen = []
+    collect = ClassicDataFrame.collect
+
+    def counting_collect(df):
+        seen.append(df._jdf.queryExecution().analyzed().treeString().count("\n"))
+        return collect(df)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClassicDataFrame, "collect", counting_collect)
+        call()
+    return seen[-1]
+
+
+@pytest.mark.parametrize("index_type", ["flat", "hnsw"])
+def test_read_plans_stay_bounded_across_adds(spark, monkeypatch, index_type):
+    """Reads scan the materialized corpus and graph, so their plans do
+    not grow with the number of adds behind them."""
+    import random
+
+    rng = random.Random(9)
+    db = VectorDatabase(spark, dim=4, index_type=index_type)
+    q = [0.2, 0.4, 0.6, 0.8]
+
+    def plan_sizes():
+        return (
+            _last_plan_nodes(monkeypatch, lambda: db.query_vector(q, top_k=3)),
+            _last_plan_nodes(monkeypatch, lambda: db.query_text("beta", top_k=3)),
+        )
+
+    db.add(*_batch(rng, 12))
+    after_one = plan_sizes()
+    for _ in range(3):
+        db.add(*_batch(rng, 4))
+    assert plan_sizes() == after_one

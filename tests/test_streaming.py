@@ -444,6 +444,26 @@ def test_streaming_neardup_within_batch_winner(spark, tmp_path):
     assert {r.doc_id for r in nd.kept().collect()} == {3}
 
 
+def test_streaming_neardup_unreadable_state_raises(spark, tmp_path):
+    """Band-bucket state that exists but cannot be read must fail the
+    batch, not pass as "no state yet": that reading would admit an exact
+    duplicate of a kept doc."""
+    from homemade_vector_db_spark.streaming.dedup import IncrementalNearDup
+
+    text = "the quick brown fox jumps over the lazy dog again and again " * 5
+    nd = IncrementalNearDup(spark, str(tmp_path / "nd_bad"))
+    nd.ingest_batch(
+        spark.createDataFrame([(1, text)], "doc_id LONG, text STRING"), 0
+    )
+    parts = list((tmp_path / "nd_bad" / "band_buckets").rglob("*.parquet"))
+    assert parts
+    for p in parts:
+        p.write_bytes(b"not a parquet file")
+    dup = spark.createDataFrame([(2, text)], "doc_id LONG, text STRING")
+    with pytest.raises(Exception):
+        nd.ingest_batch(dup, 1)
+
+
 def test_streaming_neardup_on_stream(spark, tmp_path):
     """End-to-end through a real readStream + foreachBatch."""
     from homemade_vector_db_spark.streaming.dedup import IncrementalNearDup
