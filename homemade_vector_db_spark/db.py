@@ -24,50 +24,174 @@ Persistence is parquet + a JSON manifest instead of pickle sniffing
 (local_db.py:210-265).
 
 index_type: 'flat' → exact brute-force (default; the only hash-checkable
-path, mirroring test_local_db.py:155-157's "flat is exact" stance);
-'lsh' (HNSW role) and 'ivf' (coarse-cell role) → ann.py, recall-tested;
-'ivfpq' → the REAL residual-encoded IVF-PQ tier (pq.build_ivfpq — ADC
-shortlist over probed cells, exact rerank; faiss IndexIVFPQ parity);
-'nsw' (graph tier behind the 'hnsw' alias) → nsw.py; 'sq8' / 'bq' /
-'ivfbq' (compressed shortlist → exact rerank; ivfbq adds coarse-cell
-scan pruning) → sq.py / bq.py; 'opq' (rotated PQ — FAISS OPQMatrix
-role: PCA rotation + eigenvalue-balanced subspaces ahead of the PQ
-kernel, ADC shortlist → exact rerank) → opq.py; 'ivfopq' (the FAISS
-OPQ{m}+IVF{nlist},PQ{m} stack: rotation ahead of coarse cells AND
-residual codebooks, probed-cell ADC → exact original-frame rerank)
-→ opq.py.
+path, mirroring test_local_db.py:155-157's "flat is exact" stance); every
+other type is one row of `_TIERS`, which says how the facade builds,
+searches, extends and shrinks that tier's index:
+'lsh' (MLlib bucketed random projections) and 'ivf' (coarse cells) →
+ann.py; 'nsw' (the sharded HNSW graph behind the reference's 'hnsw'
+spelling) → nsw.py; 'ivfpq' (residual-encoded IVF-PQ, faiss IndexIVFPQ
+parity) → pq.py; 'sq8' / 'bq' / 'ivfbq' (compressed scans; ivfbq adds
+coarse-cell pruning) → sq.py / bq.py; 'opq' / 'ivfopq' (the FAISS
+OPQMatrix rotation ahead of PQ or IVF-PQ) → opq.py. The compressed tiers
+score a shortlist and share one exact rerank (tier.rerank); their index
+relations are saved, filtered on delete and materialized on add by one
+walker (tier.py).
 """
 
 from __future__ import annotations
 
 import json
 import os
-from typing import Any, Callable, Mapping, Sequence
+from typing import Any, Callable, Mapping, NamedTuple, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from homemade_vector_db_spark.operators import bm25, hybrid, knn
+from homemade_vector_db_spark.operators import (
+    ann, bm25, bq, hybrid, knn, nsw, opq, pq, sq, tier,
+)
 from homemade_vector_db_spark.session import materialize, release
 
-
-def _clamp_m(pq_code_size: int, dim: int) -> int:
-    """The shared PQ subspace-count law for the opq/ivfopq/ivfpq facade
-    tiers: m = pq_code_size clamped to a divisor of dim (faiss would
-    throw on a non-divisor — we degrade gracefully), validated ≥ 1."""
-    if pq_code_size < 1:
-        raise ValueError(f"pq_code_size must be >= 1, got {pq_code_size}")
-    m = min(pq_code_size, dim)
-    while dim % m != 0:
-        m -= 1
-    return m
+FORMAT_VERSION = 3  # v3: the index is saved by tier.save_index
 
 
-_INDEX_TYPES = (
-    "flat", "lsh", "ivf", "ivfpq", "nsw", "sq8", "bq", "ivfbq", "opq",
-    "ivfopq",
-)
+class _Tier(NamedTuple):
+    """How the facade drives one index type. Every callable takes the
+    facade first, for its columns and tuning laws.
+
+    - build(db) → index over the current corpus.
+    - search(db, index, query, k) → (id, score) top-k, or with `rerank`
+      a shortlist of k ids that tier.rerank scores exactly.
+    - add(db, index, rows) → index extended with `rows` under its frozen
+      geometry. None: the index is derived state, dropped on every
+      mutation, never saved, rebuilt lazily by the next search.
+    - delete(db, index, ids) → index without `ids`; by default every
+      relation is filtered (tier.without_ids).
+    - tombstones: delete marks ids instead of dropping rows, so an
+      update rebuilds lazily (a replacement row would collide with its
+      own tombstone).
+    """
+
+    build: Callable
+    search: Callable
+    rerank: bool = False
+    add: Callable | None = None
+    delete: Callable = lambda db, idx, ids: tier.without_ids(idx, ids)
+    tombstones: bool = False
+
+
+def _build_graph(db):
+    # reference hnsw kwargs map 1:1 (local_db.py:41-47)
+    return nsw.build_nsw(
+        db._df, id_col=db.id_col, vec_col=db.vec_col, m=db.M,
+        ef_construction=db.ef_construction,
+        rows_per_shard=db._nsw_rows_per_shard, cache=False,
+    )
+
+
+def _graph_add(db, idx, rows):
+    """hnswlib add_items parity (local_db.py:78-80): same shard hash,
+    same level law, the insertion loop continues from the existing
+    graph. The shard count is index identity, so a long add stream
+    fattens shards; once the mean shard reaches 4x the build-time target
+    the graph re-shards (the hnswlib resize analogue, local_db.py:45
+    max_elements) — levels are an id-hash law, so only shard membership
+    and links change."""
+    idx = nsw.nsw_add(idx, rows)
+    if db._n >= 4 * idx.rows_per_shard * idx.n_shards:
+        idx = nsw.nsw_rebalance(idx, rows_per_shard=idx.rows_per_shard)
+    return idx
+
+
+_TIERS = {
+    "lsh": _Tier(
+        build=lambda db: ann.build_lsh(
+            db._df, id_col=db.id_col, vec_col=db.vec_col, cache=False
+        ),
+        search=lambda db, idx, q, k: ann.lsh_search(idx, q, k=k),
+    ),
+    "ivf": _Tier(
+        build=lambda db: db._coarse(),
+        search=lambda db, idx, q, k: ann.ivf_search(
+            idx, q, k=k, nprobe=db._nprobe(idx.centroids)
+        ),
+        add=lambda db, idx, rows: ann.ivf_add(idx, rows),
+    ),
+    "ivfpq": _Tier(
+        build=lambda db: pq.build_ivfpq(
+            db._coarse(), m=db._pq_m(), codebook_size=256, dim=db.dim,
+            cache=False,
+        ),
+        search=lambda db, idx, q, k: pq.ivfpq_search(
+            idx, q, k=k, nprobe=db._nprobe(idx.centroids),
+            score_decimals=None,
+        ),
+        rerank=True,
+        add=lambda db, idx, rows: pq.ivfpq_add(idx, rows),
+    ),
+    "nsw": _Tier(
+        build=_build_graph,
+        search=lambda db, idx, q, k: nsw.nsw_search(
+            idx, q, k=k, ef_search=db.ef_search
+        ),
+        add=_graph_add,
+        delete=lambda db, idx, ids: nsw.nsw_delete(idx, ids),
+        tombstones=True,
+    ),
+    "sq8": _Tier(
+        build=lambda db: sq.build_sq(
+            db._df, id_col=db.id_col, vec_col=db.vec_col, dim=db.dim,
+            cache=False,
+        ),
+        search=lambda db, idx, q, k: sq.sq_search(
+            idx, q, k=k, score_decimals=None
+        ),
+        rerank=True,
+        add=lambda db, idx, rows: sq.sq_add(idx, rows),
+    ),
+    "bq": _Tier(
+        build=lambda db: bq.build_bq(
+            db._df, id_col=db.id_col, vec_col=db.vec_col, dim=db.dim,
+            cache=False,
+        ),
+        search=lambda db, idx, q, k: bq.bq_search(idx, q, k=k),
+        rerank=True,
+        add=lambda db, idx, rows: bq.bq_add(idx, rows),
+    ),
+    "ivfbq": _Tier(
+        build=lambda db: bq.build_ivfbq(db._coarse(), dim=db.dim, cache=False),
+        search=lambda db, idx, q, k: bq.ivfbq_search(
+            idx, q, k=k, nprobe=db._nprobe(idx.centroids)
+        ),
+        rerank=True,
+        add=lambda db, idx, rows: bq.bq_add(idx, rows),
+    ),
+    "opq": _Tier(
+        build=lambda db: opq.build_opq(
+            db._df, id_col=db.id_col, vec_col=db.vec_col, m=db._pq_m(),
+            codebook_size=256, dim=db.dim, cache=False,
+        ),
+        search=lambda db, idx, q, k: opq.rotated_search(
+            idx, q, k=k, score_decimals=None
+        ),
+        rerank=True,
+        add=lambda db, idx, rows: opq.rotated_add(idx, rows),
+    ),
+    "ivfopq": _Tier(
+        build=lambda db: opq.build_ivfopq(
+            db._df, id_col=db.id_col, vec_col=db.vec_col, nlist=db._nlist(),
+            m=db._pq_m(), codebook_size=256, dim=db.dim, cache=False,
+        ),
+        search=lambda db, idx, q, k: opq.rotated_search(
+            idx, q, k=k, nprobe=db._nprobe(idx.inner.centroids),
+            score_decimals=None,
+        ),
+        rerank=True,
+        add=lambda db, idx, rows: opq.rotated_add(idx, rows),
+    ),
+}
+_INDEX_TYPES = ("flat", *_TIERS)
 # Reference spellings (local_db.py:24: 'hnsw' | 'flat' | 'ivfpq') map onto
 # the Spark-native tier that fills the same role, so reference call sites
 # port 1:1. "hnsw" maps to the sharded NSW GRAPH tier (operators/nsw.py)
@@ -98,13 +222,14 @@ class VectorDatabase:
         """Reference constructor shape (local_db.py:21-54) ports 1:1.
 
         Tuning-kwarg mapping onto the Spark tiers:
-        - `ivf_clusters` → IVF nlist (same meaning as FAISS nlist);
-        - `ef_search` → IVF nprobe-style probe width at query time
-          (HNSW's beam width plays the same recall/cost role);
-        - `ef_construction` / `M` / `pq_code_size` are HNSW-graph / PQ
-          build params with no direct analogue in the LSH tier — accepted
-          and recorded so reference call sites run, documented as
-          inert (build_pq takes its own m/codebook_size);
+        - `ivf_clusters` → IVF nlist (same meaning as FAISS nlist),
+          capped at n//2 (`_nlist`);
+        - `ef_search` → the graph tier's layer-0 beam width, and the
+          probe width nprobe = ef_search//10 of the cell tiers (`_nprobe`);
+        - `M` / `ef_construction` → the graph tier's links per node and
+          build beam width (hnswlib semantics);
+        - `pq_code_size` → the PQ subspace count m of the ivfpq / opq /
+          ivfopq tiers, clamped to a divisor of dim (`_pq_m`);
         - `init_index` is inert: all derived state here is lazy.
         """
         # parity: reject unknown index types (local_db.py:53-54);
@@ -124,7 +249,7 @@ class VectorDatabase:
         self.init_index = init_index
         self._df: DataFrame | None = None
         self._stats: bm25.BM25Stats | None = None
-        self._ann_index = None  # LSHIndex | IVFIndex, built lazily
+        self._ann_index = None  # the tier's index, built lazily
         self._n = 0
         # high-water mark for id assignment: bumped by add, never reduced
         # by delete, so deleted ids are never reissued to new documents
@@ -182,145 +307,46 @@ class VectorDatabase:
             self._stats = None
 
     def _drop_index(self) -> None:
-        """Forget the ANN index, releasing the graph tier's graph."""
-        from homemade_vector_db_spark.operators import nsw as nswmod
-
-        if isinstance(self._ann_index, nswmod.NSWIndex):
-            release(self._ann_index.graph)
+        """Forget the ANN index, releasing its relations."""
+        if self._ann_index is not None:
+            for df in tier.frames(self._ann_index).values():
+                release(df)
         self._ann_index = None
 
+    def _set_index(self, idx) -> None:
+        """Install a mutated index: materialize the relations the mutation
+        produced and release the ones they replace (tier.settle)."""
+        self._ann_index = tier.settle(idx, self._ann_index)
+
     def _maintain_index_on_append(self, new: DataFrame) -> None:
-        """Per-tier incremental index maintenance for an appended row
-        block (shared by add and merge): IVF/SQ/BQ encode with frozen
-        trained geometry; the graph tier inserts incrementally and
-        auto-rebalances; other tiers rebuild lazily."""
-        if self._ann_index is not None and self.index_type == "ivf":
-            # incremental maintenance: assign the batch to existing cells
-            # (no refit) — vs the reference rebuilding per add
-            # (local_db.py:82-111)
-            from homemade_vector_db_spark.operators import ann
-
-            self._ann_index = ann.ivf_add(self._ann_index, new)
-        elif self._ann_index is not None and self.index_type == "ivfpq":
-            from homemade_vector_db_spark.operators import pq as pqmod
-
-            self._ann_index = pqmod.ivfpq_add(self._ann_index, new)
-        elif self._ann_index is not None and self.index_type == "sq8":
-            # add-after-train: encode with the FROZEN trained geometry
-            from homemade_vector_db_spark.operators import sq as sqmod
-
-            self._ann_index = sqmod.sq_add(self._ann_index, new)
-        elif self._ann_index is not None and self.index_type == "bq":
-            from homemade_vector_db_spark.operators import bq as bqmod
-
-            self._ann_index = bqmod.bq_add(self._ann_index, new)
-        elif self._ann_index is not None and self.index_type == "opq":
-            from homemade_vector_db_spark.operators import opq as opqmod
-
-            self._ann_index = opqmod.opq_add(self._ann_index, new)
-        elif self._ann_index is not None and self.index_type == "ivfopq":
-            from homemade_vector_db_spark.operators import opq as opqmod
-
-            self._ann_index = opqmod.ivfopq_add(self._ann_index, new)
-        elif self._ann_index is not None and self.index_type in ("hnsw", "nsw"):
-            # incremental graph insert — hnswlib add_items parity
-            # (local_db.py:78-80): same shard hash, same level law, the
-            # shared insertion loop continues from the existing graph
-            from homemade_vector_db_spark.operators import nsw as nswmod
-
-            if self._ann_index.n_shards <= 0:
-                # legacy pre-round-4 manifest (shard count unknown):
-                # db.add already knows how to rebalance, so repair here
-                # instead of surfacing nsw_add's operator-level ValueError
-                # — the hard error stays for direct operator use.
-                self._ann_index = nswmod.nsw_rebalance(
-                    self._ann_index, rows_per_shard=self._nsw_rows_per_shard
-                )
-            self._ann_index = nswmod.nsw_add(self._ann_index, new)
-            # hnswlib resize analogue (local_db.py:45 max_elements): a
-            # long add stream keeps the shard count fixed (it is index
-            # identity), so shards fatten until the per-shard sequential
-            # insert/beam dominates. When mean shard size reaches 4x the
-            # build-time target, re-shard offline — recall is preserved
-            # (levels are an id-hash law; links re-prune under the same
-            # discipline), only shard membership changes.
-            idx = self._ann_index
-            if self._n >= 4 * idx.rows_per_shard * idx.shard_count():
-                self._ann_index = nswmod.nsw_rebalance(
-                    idx, rows_per_shard=idx.rows_per_shard
-                )
-        else:
+        """Encode an appended row block (shared by add, merge and update)
+        into the trained index against its frozen geometry — vs the
+        reference rebuilding per add (local_db.py:82-111); a tier without
+        an add rebuilds lazily."""
+        if self._ann_index is None:
+            return
+        add = _TIERS[self.index_type].add
+        if add is None:
             self._drop_index()
+        else:
+            self._set_index(add(self, self._ann_index, new))
 
     def _maintain_index_on_delete(
         self, id_list: "list[int]", for_update: bool = False
     ) -> None:
-        """Per-tier incremental maintenance for a deleted id block
-        (VERDICT r10 Next #7 — mutation-driven maintenance instead of
-        fingerprint-rotation full rebuilds): the code tiers (IVF /
-        IVF-PQ / PQ / SQ8 / BQ) store per-row codes against FROZEN
-        trained geometry, so deletion is an exact filter of the code
-        relation — search results equal a from-scratch rebuild minus
-        the rows (the geometry never depended on individual rows being
-        present). The graph tier (hnsw/nsw) mark-deletes (round 11 —
-        nsw.nsw_delete, the hnswlib mark_deleted analogue: tombstones
-        stay for routing, search excludes them, rebalance GCs them);
-        for an UPDATE the graph tier instead rebuilds lazily — the
-        replacement row would collide with its own tombstone in the
-        per-shard insertion state, and hnswlib's in-place replace has
-        the same repair caveat."""
-        import dataclasses
-
-        idx = self._ann_index
-        if idx is None:
+        """Remove a deleted id block from the trained index instead of
+        rebuilding it: the code tiers store per-row codes against FROZEN
+        trained geometry, so deletion is an exact filter and search
+        results equal a rebuild minus the rows; the graph tier
+        mark-deletes (nsw.nsw_delete, the hnswlib mark_deleted analogue)
+        except inside an update."""
+        if self._ann_index is None:
             return
-        t = self.index_type
-        cond = ~F.col(self.id_col).isin(id_list)
-        if t == "ivf":
-            self._ann_index = dataclasses.replace(
-                idx, assignments=idx.assignments.where(cond)
-            )
-        elif t == "ivfpq":
-            self._ann_index = dataclasses.replace(
-                idx,
-                pq=dataclasses.replace(
-                    idx.pq, codes=idx.pq.codes.where(cond)
-                ),
-                codes_with_cluster=idx.codes_with_cluster.where(cond),
-            )
-        elif t in ("pq", "sq8", "bq"):
-            self._ann_index = dataclasses.replace(
-                idx, codes=idx.codes.where(cond)
-            )
-        elif t == "opq":
-            # codes live on the inner rotated-frame PQ index; frozen
-            # rotation/codebooks never depended on the deleted rows
-            self._ann_index = dataclasses.replace(
-                idx,
-                pq_index=dataclasses.replace(
-                    idx.pq_index, codes=idx.pq_index.codes.where(cond)
-                ),
-            )
-        elif t == "ivfopq":
-            # same law one level deeper: the rotated-frame IVF-PQ codes
-            self._ann_index = dataclasses.replace(
-                idx,
-                ivfpq=dataclasses.replace(
-                    idx.ivfpq,
-                    pq=dataclasses.replace(
-                        idx.ivfpq.pq, codes=idx.ivfpq.pq.codes.where(cond)
-                    ),
-                    codes_with_cluster=idx.ivfpq.codes_with_cluster.where(
-                        cond
-                    ),
-                ),
-            )
-        elif t in ("hnsw", "nsw") and not for_update:
-            from homemade_vector_db_spark.operators import nsw as nswmod
-
-            self._ann_index = nswmod.nsw_delete(idx, id_list)
-        else:
+        t = _TIERS[self.index_type]
+        if t.add is None or (for_update and t.tombstones):
             self._drop_index()
+        else:
+            self._set_index(t.delete(self, self._ann_index, id_list))
 
     def merge(self, other: "VectorDatabase") -> None:
         """Absorb another database into this one — the capability a
@@ -548,157 +574,50 @@ class VectorDatabase:
         return [r[self.id_col] for r in res]
 
     def _ann_search(self, vector: list[float], top_k: int):
-        from homemade_vector_db_spark.operators import ann
-
-        from homemade_vector_db_spark.operators import nsw as nswmod
-
+        t = _TIERS[self.index_type]
         if self._ann_index is None:
-            if self.index_type == "lsh":
-                self._ann_index = ann.build_lsh(
-                    self._df, id_col=self.id_col, vec_col=self.vec_col
-                )
-            elif self.index_type == "nsw":
-                # reference hnsw kwargs map 1:1 (local_db.py:41-47); the
-                # graph is materialized, so it outlives the corpus it
-                # was built from
-                idx = nswmod.build_nsw(
-                    self._df, id_col=self.id_col, vec_col=self.vec_col,
-                    m=self.M, ef_construction=self.ef_construction,
-                    rows_per_shard=self._nsw_rows_per_shard, cache=False,
-                )
-                idx.graph = materialize(idx.graph)
-                self._ann_index = idx
-            elif self.index_type == "sq8":
-                from homemade_vector_db_spark.operators import sq as sqmod
+            # materialized, so the index outlives the corpus it was built from
+            self._ann_index = tier.settle(t.build(self))
+        if not t.rerank:
+            return t.search(self, self._ann_index, vector, top_k)
+        shortlist = t.search(self, self._ann_index, vector, self._pool(top_k))
+        return tier.rerank(
+            shortlist, self._df, vector, top_k, self.id_col, self.vec_col
+        )
 
-                self._ann_index = sqmod.build_sq(
-                    self._df, id_col=self.id_col, vec_col=self.vec_col,
-                    dim=self.dim,
-                )
-            elif self.index_type == "bq":
-                from homemade_vector_db_spark.operators import bq as bqmod
+    # One law per tuning mapping (see __init__).
+    def _nlist(self) -> int:
+        return min(self.ivf_clusters, max(1, self._n // 2))
 
-                self._ann_index = bqmod.build_bq(
-                    self._df, id_col=self.id_col, vec_col=self.vec_col,
-                    dim=self.dim,
-                )
-            elif self.index_type == "ivfbq":
-                from homemade_vector_db_spark.operators import bq as bqmod
-
-                coarse = ann.build_ivf(
-                    self._df, id_col=self.id_col, vec_col=self.vec_col,
-                    nlist=min(self.ivf_clusters, max(1, self._n // 2)),
-                )
-                self._ann_index = bqmod.build_ivfbq(coarse, dim=self.dim)
-            elif self.index_type == "opq":
-                from homemade_vector_db_spark.operators import opq as opqmod
-
-                m = _clamp_m(self.pq_code_size, self.dim)
-                self._ann_index = opqmod.build_opq(
-                    self._df, id_col=self.id_col, vec_col=self.vec_col,
-                    m=m, codebook_size=256, dim=self.dim,
-                )
-            elif self.index_type == "ivfopq":
-                from homemade_vector_db_spark.operators import opq as opqmod
-
-                # the FAISS OPQ{m}+IVF{nlist},PQ{m} recipe: shared
-                # m-clamp law, same nlist cap as ivf/ivfpq
-                m = _clamp_m(self.pq_code_size, self.dim)
-                self._ann_index = opqmod.build_ivfopq(
-                    self._df, id_col=self.id_col, vec_col=self.vec_col,
-                    nlist=min(self.ivf_clusters, max(1, self._n // 2)),
-                    m=m, codebook_size=256, dim=self.dim,
-                )
-            elif self.index_type == "ivfpq":
-                from homemade_vector_db_spark.operators import pq as pqmod
-
-                coarse = ann.build_ivf(
-                    self._df, id_col=self.id_col, vec_col=self.vec_col,
-                    nlist=min(self.ivf_clusters, max(1, self._n // 2)),
-                )
-                # m = pq_code_size (the faiss IndexIVFPQ 'm'), shared
-                # clamp law
-                m = _clamp_m(self.pq_code_size, self.dim)
-                self._ann_index = pqmod.build_ivfpq(
-                    coarse, m=m, codebook_size=256, dim=self.dim
-                )
-            else:  # ivf
-                self._ann_index = ann.build_ivf(
-                    self._df, id_col=self.id_col, vec_col=self.vec_col,
-                    nlist=min(self.ivf_clusters, max(1, self._n // 2)),
-                )
-        if self.index_type == "lsh":
-            return ann.lsh_search(self._ann_index, vector, k=top_k)
-        if self.index_type == "nsw":
-            return nswmod.nsw_search(
-                self._ann_index, vector, k=top_k, ef_search=self.ef_search
-            )
-        if self.index_type == "ivfbq":
-            from homemade_vector_db_spark.operators import bq as bqmod
-
-            # ef_search plays the probe-width role, same mapping as ivf
-            nlist = len(self._ann_index.centroids)
-            nprobe = max(1, min(nlist, self.ef_search // 10))
-            return bqmod.ivfbq_search(
-                self._ann_index, self._df, vector, k=top_k, nprobe=nprobe,
-                pool=max(top_k * 10, 100),
-            )
-        if self.index_type == "ivfpq":
-            from homemade_vector_db_spark.operators import pq as pqmod
-
-            # ef_search → nprobe, same mapping as ivf/ivfbq; ADC
-            # shortlist widened to the reference hybrid's pool law
-            # (max(top_k·10, 100), local_db.py:362) before exact rerank
-            nlist = len(self._ann_index.centroids)
-            nprobe = max(1, min(nlist, self.ef_search // 10))
-            overfetch = max(10, -(-100 // top_k))
-            return pqmod.ivfpq_rerank_search(
-                self._ann_index, self._df, vector, k=top_k,
-                nprobe=nprobe, overfetch=overfetch,
-            )
-        if self.index_type == "ivfopq":
-            from homemade_vector_db_spark.operators import opq as opqmod
-
-            # ef_search -> nprobe and the widened-pool law, both exactly
-            # the ivfpq mapping; rerank is exact in the ORIGINAL frame
-            nlist = len(self._ann_index.ivfpq.centroids)
-            nprobe = max(1, min(nlist, self.ef_search // 10))
-            overfetch = max(10, -(-100 // top_k))
-            return opqmod.ivfopq_rerank_search(
-                self._ann_index, self._df, vector, k=top_k,
-                nprobe=nprobe, overfetch=overfetch,
-            )
-        if self.index_type == "opq":
-            from homemade_vector_db_spark.operators import opq as opqmod
-
-            # rotated-frame ADC shortlist -> exact original-frame rerank;
-            # pool mirrors the reference hybrid's widened k
-            # (max(top_k*10, 100), local_db.py:362), same as ivfpq
-            overfetch = max(10, -(-100 // top_k))
-            return opqmod.opq_rerank_search(
-                self._ann_index, self._df, vector, k=top_k,
-                overfetch=overfetch,
-            )
-        if self.index_type in ("sq8", "bq"):
-            # compressed shortlist -> exact rerank; pool mirrors the
-            # reference hybrid's widened k (max(top_k*10, 100),
-            # local_db.py:362)
-            from homemade_vector_db_spark.operators import bq as bqmod
-            from homemade_vector_db_spark.operators import sq as sqmod
-
-            pool = max(top_k * 10, 100)
-            search = (
-                sqmod.sq_rerank_search
-                if self.index_type == "sq8"
-                else bqmod.bq_rerank_search
-            )
-            return search(
-                self._ann_index, self._df, vector, k=top_k, pool=pool
-            )
+    def _nprobe(self, centroids) -> int:
         # ef_search plays the probe-width role (recall/cost knob): the
         # reference default ef_search=50 → nprobe 5 ≈ FAISS's nlist//10
-        nprobe = max(1, min(self._ann_index.nlist, self.ef_search // 10))
-        return ann.ivf_search(self._ann_index, vector, k=top_k, nprobe=nprobe)
+        return max(1, min(len(centroids), self.ef_search // 10))
+
+    @staticmethod
+    def _pool(top_k: int) -> int:
+        # the reference hybrid's widened k (local_db.py:362)
+        return max(top_k * 10, 100)
+
+    def _pq_m(self) -> int:
+        """m = pq_code_size clamped to a divisor of dim (faiss would
+        throw on a non-divisor — we degrade gracefully), validated ≥ 1."""
+        if self.pq_code_size < 1:
+            raise ValueError(
+                f"pq_code_size must be >= 1, got {self.pq_code_size}"
+            )
+        m = min(self.pq_code_size, self.dim)
+        while self.dim % m != 0:
+            m -= 1
+        return m
+
+    def _coarse(self):
+        """IVF cells over the corpus: the ivf index, and the coarse
+        quantizer of ivfbq and ivfpq."""
+        return ann.build_ivf(
+            self._df, id_col=self.id_col, vec_col=self.vec_col,
+            nlist=self._nlist(), cache=False,
+        )
 
     def _compile_filter(self, flt):
         if flt is None or isinstance(flt, Column):
@@ -835,50 +754,15 @@ class VectorDatabase:
                 os.path.join(folder_path, "bm25", "corpus_stats")
             )
             has_stats = True
-        has_ann = False
-        if include_index and self._ann_index is not None:
+        has_ann = (
+            include_index
+            and self._ann_index is not None
+            and _TIERS[self.index_type].add is not None
+        )
+        if has_ann:
             # O8 parity for the native index files (hnsw.idx / faiss.idx,
-            # local_db.py:218-221) — but cluster-partitioned parquet /
-            # MLWriter instead of opaque native blobs.
-            from homemade_vector_db_spark.operators import ann
-
-            ann_path = os.path.join(folder_path, "ann")
-            if self.index_type == "lsh":
-                ann.save_lsh(self._ann_index, ann_path)
-            elif self.index_type == "ivf":
-                ann.save_ivf(self._ann_index, ann_path)
-            elif self.index_type == "nsw":
-                from homemade_vector_db_spark.operators import nsw as nswmod
-
-                nswmod.save_nsw(self._ann_index, ann_path)
-            elif self.index_type == "sq8":
-                from homemade_vector_db_spark.operators import sq as sqmod
-
-                sqmod.save_sq(self._ann_index, ann_path)
-            elif self.index_type == "bq":
-                from homemade_vector_db_spark.operators import bq as bqmod
-
-                bqmod.save_bq(self._ann_index, ann_path)
-            elif self.index_type == "ivfbq":
-                from homemade_vector_db_spark.operators import bq as bqmod
-
-                bqmod.save_ivfbq(self._ann_index, ann_path)
-            elif self.index_type == "ivfpq":
-                from homemade_vector_db_spark.operators import pq as pqmod
-
-                pqmod.save_ivfpq(self._ann_index, ann_path)
-            elif self.index_type == "opq":
-                from homemade_vector_db_spark.operators import opq as opqmod
-
-                opqmod.save_opq(self._ann_index, ann_path)
-            elif self.index_type == "ivfopq":
-                from homemade_vector_db_spark.operators import opq as opqmod
-
-                opqmod.save_ivfopq(self._ann_index, ann_path)
-            has_ann = self.index_type in (
-                "lsh", "ivf", "ivfpq", "nsw", "sq8", "bq", "ivfbq", "opq",
-                "ivfopq",
-            )
+            # local_db.py:218-221), as partitioned parquet + index.json
+            tier.save_index(self._ann_index, os.path.join(folder_path, "ann"))
         manifest = {
             "dim": self.dim,
             "index_type": self.index_type,
@@ -889,7 +773,7 @@ class VectorDatabase:
             "has_bm25_stats": has_stats,
             "has_ann_index": has_ann,
             "next_id": self._ensure_next_id(),
-            "format_version": 2,
+            "format_version": FORMAT_VERSION,
         }
         with open(os.path.join(folder_path, "manifest.json"), "w") as f:
             json.dump(manifest, f)
@@ -898,6 +782,12 @@ class VectorDatabase:
     def load(cls, spark: SparkSession, folder_path: str) -> "VectorDatabase":
         with open(os.path.join(folder_path, "manifest.json")) as f:
             m = json.load(f)
+        version = m.get("format_version")
+        if version not in range(1, FORMAT_VERSION + 1):
+            raise ValueError(
+                f"manifest format_version {version!r} at {folder_path!r}: "
+                f"this version reads 1 to {FORMAT_VERSION}"
+            )
         db = cls(
             spark, m["dim"], m["index_type"],
             id_col=m["id_col"], text_col=m["text_col"], vec_col=m["vec_col"],
@@ -916,42 +806,13 @@ class VectorDatabase:
                 term_stats=spark.read.parquet(os.path.join(p, "term_stats")),
                 corpus_stats=spark.read.parquet(os.path.join(p, "corpus_stats")),
             )
-        if m.get("has_ann_index"):
-            from homemade_vector_db_spark.operators import ann
-
-            ann_path = os.path.join(folder_path, "ann")
-            if m["index_type"] == "lsh":
-                db._ann_index = ann.load_lsh(spark, ann_path, df)
-            elif m["index_type"] == "ivf":
-                db._ann_index = ann.load_ivf(spark, ann_path)
-            elif m["index_type"] == "nsw":
-                from homemade_vector_db_spark.operators import nsw as nswmod
-
-                db._ann_index = nswmod.load_nsw(spark, ann_path)
-            elif m["index_type"] == "sq8":
-                from homemade_vector_db_spark.operators import sq as sqmod
-
-                db._ann_index = sqmod.load_sq(spark, ann_path)
-            elif m["index_type"] == "bq":
-                from homemade_vector_db_spark.operators import bq as bqmod
-
-                db._ann_index = bqmod.load_bq(spark, ann_path)
-            elif m["index_type"] == "ivfbq":
-                from homemade_vector_db_spark.operators import bq as bqmod
-
-                db._ann_index = bqmod.load_ivfbq(spark, ann_path)
-            elif m["index_type"] == "opq":
-                from homemade_vector_db_spark.operators import opq as opqmod
-
-                db._ann_index = opqmod.load_opq(spark, ann_path)
-            elif m["index_type"] == "ivfopq":
-                from homemade_vector_db_spark.operators import opq as opqmod
-
-                db._ann_index = opqmod.load_ivfopq(spark, ann_path)
-            elif m["index_type"] == "ivfpq":
-                from homemade_vector_db_spark.operators import pq as pqmod
-
-                db._ann_index = pqmod.load_ivfpq(spark, ann_path)
+        # before v3, ann/ held a per-tier layout: ignored, the index
+        # rebuilds lazily from the loaded corpus
+        # (the import_reference stance, and local_db.py:257's)
+        if m.get("has_ann_index") and version == FORMAT_VERSION:
+            db._ann_index = tier.load_index(
+                spark, os.path.join(folder_path, "ann")
+            )
         return db
 
     @classmethod

@@ -30,7 +30,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -74,7 +74,7 @@ def build_ivf(
     zero-shuffle distributed path (`ivf_assign`, vectorized argmin in
     mapInPandas). At 100 TB: `assignments.write.partitionBy('cluster')`
     so query-time cell probes become partition pruning instead of a
-    filter scan (save_ivf does exactly this).
+    filter scan (tier.save_index does exactly this).
     """
     import numpy as np
 
@@ -118,6 +118,20 @@ def build_ivf(
     return idx
 
 
+def nearest_cells(centroids, query, nprobe: int | None = None) -> list[int]:
+    """The nprobe cells whose centroids lie nearest the query, nearest
+    first; nprobe defaults to nlist//10 (FAISS default mirrored from
+    local_db.py:52). Centroid ranking is nlist×dim floats on the driver
+    — numpy, not a job."""
+    import numpy as np
+
+    cents = np.asarray(centroids, dtype="float64")
+    if nprobe is None:
+        nprobe = max(1, len(cents) // 10)
+    d2 = ((cents - np.asarray(list(query), dtype="float64")) ** 2).sum(axis=1)
+    return [int(c) for c in np.argsort(d2, kind="stable")[:nprobe]]
+
+
 def ivf_search(
     index: IVFIndex,
     query: Sequence[float],
@@ -125,18 +139,8 @@ def ivf_search(
     nprobe: int | None = None,
     metric: str = "sqeuclidean",
 ) -> DataFrame:
-    """Top-k over the nprobe nearest cells. nprobe defaults to nlist//10
-    (FAISS default mirrored from local_db.py:52)."""
-    if nprobe is None:
-        nprobe = max(1, index.nlist // 10)
-    nprobe = min(nprobe, index.nlist)
-    # centroid ranking: nlist×dim floats on the driver — numpy, not a job
-    import numpy as np
-
-    cents = np.asarray(index.centroids, dtype="float64")
-    q = np.asarray(list(query), dtype="float64")
-    d2 = ((cents - q) ** 2).sum(axis=1)
-    probe = [int(c) for c in np.argsort(d2, kind="stable")[:nprobe]]
+    """Top-k over the nprobe nearest cells (`nearest_cells`)."""
+    probe = nearest_cells(index.centroids, query, nprobe)
     cells = index.assignments.where(F.col("cluster").isin(probe))
     return knn_exact(
         cells, list(query), id_col=index.id_col, vec_col=index.vec_col,
@@ -168,19 +172,13 @@ def ivf_search_filtered(
     that q_ann_filtered_recall gates. `build_ivf` keeps every input
     column in `assignments`, so the predicate is an ordinary codegen'd
     Column over the cell scan: partition-prunable when assignments are
-    written partitionBy('cluster') (save_ivf), pushed to parquet row
+    written partitionBy('cluster') (tier.save_index), pushed to parquet row
     groups either way. No new kernel: the filtered cells feed the same
     exact knn_exact law, so returned scores are bit-identical to the
     flat path's for any returned id."""
     if nprobe is None:
         nprobe = max(1, index.nlist // 10)
-    nprobe = min(max(1, nprobe * widen), index.nlist)
-    import numpy as np
-
-    cents = np.asarray(index.centroids, dtype="float64")
-    q = np.asarray(list(query), dtype="float64")
-    d2 = ((cents - q) ** 2).sum(axis=1)
-    probe = [int(c) for c in np.argsort(d2, kind="stable")[:nprobe]]
+    probe = nearest_cells(index.centroids, query, max(1, nprobe * widen))
     cells = index.assignments.where(F.col("cluster").isin(probe)).where(
         predicate
     )
@@ -231,15 +229,13 @@ def ivf_assign(index: IVFIndex, new_df: DataFrame) -> DataFrame:
     return new_df.mapInPandas(assign, schema=out_schema)
 
 
-def ivf_add(index: IVFIndex, new_df: DataFrame, cache: bool = True) -> IVFIndex:
+def ivf_add(index: IVFIndex, new_df: DataFrame) -> IVFIndex:
     """Extend the index with newly-ingested vectors (assign-only). Call
     `build_ivf` afresh when drift makes the fixed centroids stale — the
     classic rebuild-on-threshold policy; assignments are append-only
-    parquet in the meantime (save_ivf partitions by cluster, so appends
-    land in the right partitions)."""
+    parquet in the meantime (tier.save_index partitions by cluster, so
+    appends land in the right partitions)."""
     extended = index.assignments.unionByName(ivf_assign(index, new_df))
-    if cache:
-        extended.cache()
     return IVFIndex(extended, index.centroids, index.id_col, index.vec_col)
 
 
@@ -356,64 +352,3 @@ def lsh_batch_search(
         )
         .orderBy(query_id_col, "rn")
     )
-
-
-# ------------------------------------------------------------------ persist
-def save_ivf(index: IVFIndex, path: str) -> None:
-    """Persist IVF state (O8 parity for faiss.idx, local_db.py:218-221):
-    assignments written `partitionBy(cluster)` so a reloaded index's
-    nprobe cell filter is parquet partition PRUNING — probing 10/100
-    cells reads 10% of the files, the same scan-fraction contract FAISS
-    nprobe gives in RAM; centroids (tiny) as JSON."""
-    import json
-    import os
-
-    index.assignments.write.mode("overwrite").partitionBy("cluster").parquet(
-        os.path.join(path, "assignments")
-    )
-    with open(os.path.join(path, "ivf.json"), "w") as f:
-        json.dump(
-            {
-                "centroids": index.centroids,
-                "id_col": index.id_col,
-                "vec_col": index.vec_col,
-            },
-            f,
-        )
-
-
-def load_ivf(spark: SparkSession, path: str) -> IVFIndex:
-    import json
-    import os
-
-    with open(os.path.join(path, "ivf.json")) as f:
-        m = json.load(f)
-    assignments = spark.read.parquet(os.path.join(path, "assignments"))
-    return IVFIndex(assignments, m["centroids"], m["id_col"], m["vec_col"])
-
-
-def save_lsh(index: LSHIndex, path: str) -> None:
-    """Persist the LSH model (hash planes; O8 parity for hnsw.idx). The
-    hashed table is derived — recomputed by one transform at load, which
-    is cheaper at scale than storing a second copy of every vector."""
-    import json
-    import os
-
-    index.model.write().overwrite().save(os.path.join(path, "model"))
-    with open(os.path.join(path, "lsh.json"), "w") as f:
-        json.dump({"id_col": index.id_col, "vec_col": index.vec_col}, f)
-
-
-def load_lsh(spark: SparkSession, path: str, df: DataFrame) -> LSHIndex:
-    """`df` is the corpus to re-hash (same relation the index was built
-    on — the model's planes make the hashing deterministic)."""
-    import json
-    import os
-
-    from pyspark.ml.feature import BucketedRandomProjectionLSHModel
-
-    with open(os.path.join(path, "lsh.json")) as f:
-        m = json.load(f)
-    model = BucketedRandomProjectionLSHModel.load(os.path.join(path, "model"))
-    vdf = _to_vector_col(df, m["vec_col"], "__v")
-    return LSHIndex(model, model.transform(vdf), m["id_col"], m["vec_col"])

@@ -20,7 +20,7 @@ Spark-first decomposition:
 - QUERY: the query packs driver-side into word literals; Hamming =
   Σ_w bit_count(code_w XOR q_w) — whole-stage codegen, zero shuffle,
   TakeOrderedAndProject for top-k (hamming ASC, id ASC).
-- RERANK: Hamming shortlist → exact full-precision k-NN (knn.knn_exact),
+- RERANK: Hamming shortlist → exact full-precision k-NN (tier.rerank),
   the production BQ pipeline; quality gated by recall vs exact
   (queries.q_bq_recall), the same stance as the other approximate tiers.
 
@@ -31,11 +31,14 @@ the whole path is the final k-row top-k merge.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from homemade_vector_db_spark.operators.sq import dim_ranges
+from homemade_vector_db_spark.operators.tier import vector_dim
 
 WORD = 64  # bits per packed code word (LongType)
 
@@ -96,16 +99,8 @@ def pack_query(query: Sequence[float], thresholds: Sequence[float]) -> list[int]
 
 def _fit_thresholds(df: DataFrame, vec_col: str, dim: int) -> list[float]:
     """Per-dimension midrange split points via one distributed agg."""
-    aggs = []
-    for i in range(1, dim + 1):
-        e = F.element_at(F.col(vec_col), i)
-        aggs.append(F.min(e).alias(f"mn{i}"))
-        aggs.append(F.max(e).alias(f"mx{i}"))
-    row = df.agg(*aggs).first()
-    return [
-        (float(row[f"mn{i}"]) + float(row[f"mx{i}"])) / 2.0
-        for i in range(1, dim + 1)
-    ]
+    mins, maxs = dim_ranges(df, vec_col, dim)
+    return [(mn + mx) / 2.0 for mn, mx in zip(mins, maxs)]
 
 
 def build_bq(
@@ -116,11 +111,7 @@ def build_bq(
     cache: bool = True,
 ) -> BQIndex:
     """Fit midrange thresholds (one distributed agg) and encode."""
-    if dim is None:
-        first = df.select(vec_col).first()
-        if first is None:
-            raise ValueError("cannot build BQ index on empty table")
-        dim = len(first[0])
+    dim = vector_dim(df, vec_col, dim)
 
     thresholds = _fit_thresholds(df, vec_col, dim)
     codes = df.select(
@@ -149,69 +140,20 @@ def bq_search(index: BQIndex, query: Sequence[float], k: int = 10) -> DataFrame:
     id ASC ties — fully deterministic (midrange thresholds), so this is
     hash-checkable against an external oracle, unlike the other
     approximate tiers."""
+    return _hamming_topk(index, index.codes, query, k)
+
+
+def _hamming_topk(index, codes: DataFrame, query, k: int) -> DataFrame:
     q = [float(x) for x in query]
     if len(q) != index.dim:
         raise ValueError(f"query dim {len(q)} != {index.dim}")
     qwords = pack_query(q, index.thresholds)
     return (
-        index.codes.select(
+        codes.select(
             F.col(index.id_col), hamming_expr("words", qwords).alias("hamming")
         )
         .orderBy(F.asc("hamming"), F.asc(index.id_col))
         .limit(k)
-    )
-
-
-def bq_rerank_search(
-    index: BQIndex,
-    df: DataFrame,
-    query: Sequence[float],
-    k: int = 10,
-    pool: int = 100,
-    score_decimals: int | None = 6,
-) -> DataFrame:
-    """Hamming shortlist (`pool` candidates) → exact full-precision
-    rerank — the production BQ pipeline (1-bit scan bounds the exact
-    arithmetic to `pool` rows)."""
-    from homemade_vector_db_spark.operators.knn import knn_exact
-
-    shortlist = bq_search(index, query, k=pool).select(index.id_col)
-    cand = df.join(F.broadcast(shortlist), index.id_col)
-    return knn_exact(
-        cand, list(query), id_col=index.id_col, vec_col=index.vec_col,
-        k=k, dim=index.dim, score_decimals=score_decimals,
-    )
-
-
-def save_bq(index: BQIndex, path: str) -> None:
-    """Persist BQ state (same O8 manifest shape as sq.save_sq): codes
-    parquet + threshold geometry JSON; rerank rejoins the caller's corpus
-    table by id rather than duplicating vectors."""
-    import json
-    import os
-
-    index.codes.write.mode("overwrite").parquet(os.path.join(path, "codes"))
-    with open(os.path.join(path, "bq.json"), "w") as f:
-        json.dump(
-            {
-                "thresholds": index.thresholds,
-                "dim": index.dim,
-                "id_col": index.id_col,
-                "vec_col": index.vec_col,
-            },
-            f,
-        )
-
-
-def load_bq(spark, path: str) -> BQIndex:
-    import json
-    import os
-
-    with open(os.path.join(path, "bq.json")) as f:
-        meta = json.load(f)
-    codes = spark.read.parquet(os.path.join(path, "codes"))
-    return BQIndex(
-        codes, meta["thresholds"], meta["dim"], meta["id_col"], meta["vec_col"]
     )
 
 
@@ -221,8 +163,8 @@ class IVFBQIndex:
     big vector stores run at scale — IVF cells prune the SCAN (probe a
     few clusters), binary codes prune the ARITHMETIC (Hamming shortlist
     before exact rerank). Codes carry the cluster id, so probing is a
-    pure filter (partition-prunable when persisted cluster-partitioned,
-    like ann.save_ivf's layout) — no join on the query path."""
+    pure filter (partition-prunable when persisted cluster-partitioned
+    by tier.save_index) — no join on the query path."""
 
     codes: DataFrame  # id + cluster INT + words ARRAY<BIGINT>
     thresholds: list[float]
@@ -238,11 +180,7 @@ def build_ivfbq(ivf_index, dim: int | None = None, cache: bool = True) -> IVFBQI
     (global geometry — per-cell thresholds would make Hamming distances
     incomparable across probed cells)."""
     df = ivf_index.assignments
-    if dim is None:
-        first = df.select(ivf_index.vec_col).first()
-        if first is None:
-            raise ValueError("cannot build IVF-BQ index on empty table")
-        dim = len(first[0])
+    dim = vector_dim(df, ivf_index.vec_col, dim)
     thresholds = _fit_thresholds(df, ivf_index.vec_col, dim)
     codes = df.select(
         F.col(ivf_index.id_col),
@@ -259,100 +197,42 @@ def build_ivfbq(ivf_index, dim: int | None = None, cache: bool = True) -> IVFBQI
 
 def ivfbq_search(
     index: IVFBQIndex,
-    df: DataFrame,
     query: Sequence[float],
     k: int = 10,
     nprobe: int | None = None,
-    pool: int = 100,
-    score_decimals: int | None = 6,
 ) -> DataFrame:
-    """probe → Hamming shortlist → exact rerank. Centroid ranking is
-    driver-side numpy (nlist×dim floats — same as ann.ivf_search); the
-    cluster filter prunes the code scan to the probed cells; the
-    shortlist bounds the exact arithmetic to `pool` rows."""
-    import numpy as np
+    """Hamming top-k within the nprobe nearest cells (ann.nearest_cells):
+    (id, hamming). The cluster filter prunes the code scan to the probed
+    cells."""
+    from homemade_vector_db_spark.operators.ann import nearest_cells
 
-    from homemade_vector_db_spark.operators.knn import knn_exact
-
-    q = [float(x) for x in query]
-    if len(q) != index.dim:
-        raise ValueError(f"query dim {len(q)} != {index.dim}")
-    nlist = len(index.centroids)
-    if nprobe is None:
-        nprobe = max(1, nlist // 10)
-    nprobe = min(nprobe, nlist)
-    cents = np.asarray(index.centroids, dtype="float64")
-    d2 = ((cents - np.asarray(q)) ** 2).sum(axis=1)
-    probe = [int(c) for c in np.argsort(d2, kind="stable")[:nprobe]]
-
-    qwords = pack_query(q, index.thresholds)
-    shortlist = (
-        index.codes.where(F.col("cluster").isin(probe))
-        .select(F.col(index.id_col), hamming_expr("words", qwords).alias("hamming"))
-        .orderBy(F.asc("hamming"), F.asc(index.id_col))
-        .limit(pool)
-        .select(index.id_col)
-    )
-    cand = df.join(F.broadcast(shortlist), index.id_col)
-    return knn_exact(
-        cand, q, id_col=index.id_col, vec_col=index.vec_col,
-        k=k, dim=index.dim, score_decimals=score_decimals,
+    probe = nearest_cells(index.centroids, query, nprobe)
+    return _hamming_topk(
+        index, index.codes.where(F.col("cluster").isin(probe)), query, k
     )
 
 
-def save_ivfbq(index: IVFBQIndex, path: str) -> None:
-    """Persist the combined index: codes parquet PARTITIONED BY cluster
-    (so a probe is a partition-pruned scan on reload — same layout as
-    ann.save_ivf) + threshold/centroid geometry JSON."""
-    import json
-    import os
+def bq_add(index: BQIndex | IVFBQIndex, new_df: DataFrame):
+    """Encode NEW vectors with the EXISTING trained thresholds (and, for
+    IVF-BQ, the EXISTING coarse cells) and union into the codes — FAISS
+    add-after-train semantics (no refit), the BQ sibling of ann.ivf_add
+    for streaming ingest. The geometry is deliberately frozen:
+    re-deriving midrange from the grown corpus would silently re-encode
+    nothing (old codes keep old thresholds) and make Hamming distances
+    incomparable across ingest generations."""
+    cols = [F.col(index.id_col)]
+    if isinstance(index, IVFBQIndex):
+        from homemade_vector_db_spark.operators.ann import IVFIndex, ivf_assign
 
-    index.codes.write.mode("overwrite").partitionBy("cluster").parquet(
-        os.path.join(path, "codes")
-    )
-    with open(os.path.join(path, "ivfbq.json"), "w") as f:
-        json.dump(
-            {
-                "thresholds": index.thresholds,
-                "centroids": index.centroids,
-                "dim": index.dim,
-                "id_col": index.id_col,
-                "vec_col": index.vec_col,
-            },
-            f,
+        new_df = ivf_assign(
+            IVFIndex(None, index.centroids, index.id_col, index.vec_col),
+            new_df,
         )
-
-
-def load_ivfbq(spark, path: str) -> IVFBQIndex:
-    import json
-    import os
-
-    with open(os.path.join(path, "ivfbq.json")) as f:
-        meta = json.load(f)
-    codes = spark.read.parquet(os.path.join(path, "codes"))
-    return IVFBQIndex(
-        codes, meta["thresholds"], meta["centroids"], meta["dim"],
-        meta["id_col"], meta["vec_col"],
-    )
-
-
-def bq_add(index: BQIndex, new_df: DataFrame) -> BQIndex:
-    """Encode NEW vectors with the EXISTING trained thresholds and union
-    into the codes — FAISS add-after-train semantics (no refit), the
-    BQ sibling of ann.ivf_add for streaming ingest. The geometry is
-    deliberately frozen: re-deriving midrange from the grown corpus
-    would silently re-encode nothing (old codes keep old thresholds) and
-    make Hamming distances incomparable across ingest generations."""
+        cols.append(F.col("cluster"))
     new_codes = new_df.select(
-        F.col(index.id_col),
+        *cols,
         pack_bits_expr(index.vec_col, index.thresholds, index.dim).alias(
             "words"
         ),
     )
-    return BQIndex(
-        index.codes.unionByName(new_codes),
-        index.thresholds,
-        index.dim,
-        index.id_col,
-        index.vec_col,
-    )
+    return replace(index, codes=index.codes.unionByName(new_codes))

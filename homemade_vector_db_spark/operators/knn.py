@@ -726,11 +726,11 @@ def knn_join_ivfpq(
     )
     cents = np.asarray(idx.centroids, dtype=np.float64)
     # (m, codebook_size, dim/m) — small enough to ship in the closure
-    cbooks = np.asarray(ivfpq.pq.codebooks, dtype=np.float64)
+    cbooks = np.asarray(ivfpq.codebooks, dtype=np.float64)
     sub = cbooks.shape[2]
     pool = k * max(1, overfetch)
     q_cells = _probe_cells(queries, cents, npro, query_id_col, qvec_col)
-    c_codes = ivfpq.codes_with_cluster.select(
+    c_codes = ivfpq.codes.select(
         F.col(id_col).alias("__cid"),
         F.col("codes").alias("__codes"),
         F.col("cluster").cast("int").alias("__cell"),

@@ -688,57 +688,3 @@ def nsw_rebalance(
         # same supersede discipline as nsw_add
         rebuilt.graph = materialize(rebuilt.graph, supersedes=index.graph)
     return rebuilt
-
-
-def save_nsw(index: NSWIndex, path: str) -> None:
-    """Graph table as shard-partitioned parquet + a params manifest —
-    search-time reads prune to shards via partition paths."""
-    import json
-    import os
-
-    index.graph.write.mode("overwrite").partitionBy("shard").parquet(
-        os.path.join(path, "graph")
-    )
-    with open(os.path.join(path, "nsw.json"), "w") as f:
-        json.dump(
-            {
-                "id_col": index.id_col,
-                "vec_col": index.vec_col,
-                "m": index.m,
-                "ef_construction": index.ef_construction,
-                # honest manifest: 0 stays 0 for a legacy-loaded index —
-                # a derived max(shard)+1 is a lower bound, and baking it
-                # in would silently change the shard law on a later add
-                "n_shards": index.n_shards,
-                "rows_per_shard": index.rows_per_shard,
-                "layout": "hnsw-v2",  # level + per-layer neighbor lists
-            },
-            f,
-        )
-
-
-def load_nsw(spark, path: str) -> NSWIndex:
-    import json
-    import os
-
-    with open(os.path.join(path, "nsw.json")) as f:
-        meta = json.load(f)
-    # Fail fast on pre-hnsw-v2 folders (flat neighbor lists, no `level`
-    # column): loading one silently would only surface later as an opaque
-    # executor-side KeyError inside nsw_search (ADVICE r3).
-    if meta.get("layout") != "hnsw-v2":
-        raise ValueError(
-            f"NSW index at {path!r} was built by an older version "
-            f"(layout={meta.get('layout')!r}, expected 'hnsw-v2') — rebuild "
-            "it with build_nsw/save_nsw."
-        )
-    graph = spark.read.parquet(os.path.join(path, "graph"))
-    return NSWIndex(
-        graph,
-        meta["id_col"],
-        meta["vec_col"],
-        meta["m"],
-        meta["ef_construction"],
-        meta.get("n_shards", 0),  # 0 = unknown; nsw_add refuses, search fine
-        rows_per_shard=meta.get("rows_per_shard", 2000),
-    )

@@ -43,23 +43,47 @@ kernel. Nothing here shuffles beyond what PQ already does.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame
 
 from homemade_vector_db_spark.operators import pca, pq
+from homemade_vector_db_spark.operators.tier import vector_dim
 
 
 @dataclass
-class OPQIndex:
-    pq_index: "pq.PQIndex"  # trained over ROTATED vectors
+class Rotated:
+    """A PQ or IVF-PQ index trained and encoded in a learned rotated
+    frame: the FAISS `OPQMatrix` ahead of a PQ index (IndexPreTransform).
+    Everything downstream of the rotation is the inner index unchanged —
+    coarse assignment, residual encoding, ADC, save layout. The wrapper
+    adds one distributed rotate pass at build/add time and one
+    driver-side gemv per query. Squared-L2 is invariant under the
+    orthogonal map, so the exact rerank runs on the RAW vectors in the
+    original frame and recall gates compare against exact search there.
+
+    Reference parity: /root/reference/local_db.py:49-52 delegates its
+    index to FAISS, whose recommended recipe for anisotropic embedding
+    spaces is exactly OPQ{m},PQ{m} or OPQ{m}+IVF{nlist},PQ{m}."""
+
+    inner: "pq.PQIndex | pq.IVFPQIndex"  # vec_col '__rot'
     mean: np.ndarray  # [dim] — sample mean removed before rotation
     rotation: np.ndarray  # [dim, dim] orthogonal (permuted PCA basis)
-    dim: int
-    id_col: str
-    vec_col: str
+    vec_col: str  # the original-frame vector column
+
+    def __post_init__(self):
+        self.mean = np.asarray(self.mean, dtype="float64")
+        self.rotation = np.asarray(self.rotation, dtype="float64")
+
+    @property
+    def id_col(self) -> str:
+        return self.inner.id_col
+
+    @property
+    def dim(self) -> int:
+        return self.inner.dim
 
 
 def balanced_allocation(variances: Sequence[float], m: int) -> list[int]:
@@ -101,8 +125,7 @@ def learn_rotation(
     full-rank PCA on the deterministic hash-ordered sample, then the
     eigenvalue-balanced row permutation that equalizes per-subspace
     variance products (Ge et al. §4). Shared by the flat OPQ tier and
-    the IVF-OPQ composition (round 13) — one definition of the
-    geometry law."""
+    the IVF-OPQ composition — one definition of the geometry law."""
     mean, comps, svals = pca.fit_pca(
         df, dim, dim, id_col=id_col, vec_col=vec_col,
         return_singular_values=True,
@@ -159,169 +182,17 @@ def build_opq(
     dim: int | None = None,
     seed: int = 42,
     cache: bool = True,
-) -> OPQIndex:
-    if dim is None:
-        first = df.select(vec_col).first()
-        if first is None:
-            raise ValueError("cannot build OPQ index on empty table")
-        dim = len(first[0])
-    mean, rotation = learn_rotation(
-        df, m, dim, id_col=id_col, vec_col=vec_col
-    )
-    rotated = rotate(df, mean, rotation, id_col, vec_col)
+) -> Rotated:
+    """learn_rotation → distributed rotate → pq.build_pq on the rotated
+    vectors (driver-sample Lloyd training, distributed encode)."""
+    dim = vector_dim(df, vec_col, dim)
+    mean, rotation = learn_rotation(df, m, dim, id_col, vec_col)
     inner = pq.build_pq(
-        rotated,
-        id_col=id_col,
-        vec_col="__rot",
-        m=m,
-        codebook_size=codebook_size,
-        dim=dim,
-        seed=seed,
-        cache=cache,
+        rotate(df, mean, rotation, id_col, vec_col), id_col=id_col,
+        vec_col="__rot", m=m, codebook_size=codebook_size, dim=dim,
+        seed=seed, cache=cache,
     )
-    return OPQIndex(inner, mean, rotation, dim, id_col, vec_col)
-
-
-def opq_search(
-    index: OPQIndex,
-    query: Sequence[float],
-    k: int = 10,
-    score_decimals: int | None = 6,
-) -> DataFrame:
-    """ADC top-k in the rotated frame: rotate the query driver-side
-    (one gemv — the FAISS OPQMatrix apply), then the standard PQ ADC
-    kernel over the rotated-frame codes."""
-    q = np.asarray(list(query), dtype="float64")
-    qr = index.rotation @ (q - index.mean)
-    return pq.pq_search(
-        index.pq_index, qr.tolist(), k=k, score_decimals=score_decimals
-    )
-
-
-def opq_add(index: OPQIndex, new_df: DataFrame) -> OPQIndex:
-    """Add-after-train: encode an appended row block with the FROZEN
-    rotation and codebooks (the sq_add/bq_add discipline — geometry
-    never depended on individual rows, so the union of code relations
-    equals a re-encode of the union). One distributed rotate + encode
-    pass over the new rows only."""
-    from dataclasses import replace
-
-    from pyspark.sql import functions as F
-
-    inner = index.pq_index
-    rotated = rotate(
-        new_df, index.mean, index.rotation, index.id_col, index.vec_col
-    )
-    sub = index.dim // inner.m
-    subcols = [
-        F.slice(F.col("__rot"), i * sub + 1, sub)
-        .cast("array<double>")
-        .alias(f"__s{i}")
-        for i in range(inner.m)
-    ]
-    base = rotated.select(F.col(index.id_col), *subcols)
-    new_codes = pq._encode(
-        base, inner.codebooks, sub, index.id_col, new_df.sparkSession
-    )
-    return replace(
-        index,
-        pq_index=replace(
-            inner, codes=inner.codes.unionByName(new_codes)
-        ),
-    )
-
-
-def opq_rerank_search(
-    index: OPQIndex,
-    df: DataFrame,
-    query: Sequence[float],
-    k: int = 10,
-    overfetch: int = 4,
-) -> DataFrame:
-    """Rotated-frame ADC shortlist (k·overfetch) → exact rerank on the
-    RAW vectors in the ORIGINAL frame (squared-L2 is rotation-invariant,
-    so original-frame exact distances rank identically — no need to
-    rotate the corpus again for the rerank join)."""
-    from homemade_vector_db_spark.operators.knn import knn_exact
-    from pyspark.sql import functions as F
-
-    shortlist = opq_search(
-        index, query, k=k * overfetch, score_decimals=None
-    ).select(index.id_col)
-    candidates = df.join(F.broadcast(shortlist), index.id_col)
-    return knn_exact(
-        candidates, list(query), id_col=index.id_col,
-        vec_col=index.vec_col, k=k,
-    )
-
-
-def save_opq(index: OPQIndex, path: str) -> None:
-    """Persist OPQ state: the inner PQ state (codes parquet + codebook
-    JSON, pq.save_pq) plus the rotation geometry (mean + orthogonal
-    matrix — dim² doubles, a JSON sidecar like the IVF centroids)."""
-    import json
-    import os
-
-    pq.save_pq(index.pq_index, path)
-    with open(os.path.join(path, "opq.json"), "w") as f:
-        json.dump(
-            {
-                "mean": index.mean.tolist(),
-                "rotation": index.rotation.tolist(),
-                "dim": index.dim,
-                "id_col": index.id_col,
-                "vec_col": index.vec_col,
-            },
-            f,
-        )
-
-
-def load_opq(spark, path: str) -> OPQIndex:
-    import json
-    import os
-
-    with open(os.path.join(path, "opq.json")) as f:
-        meta = json.load(f)
-    inner = pq.load_pq(spark, path)
-    return OPQIndex(
-        inner,
-        np.asarray(meta["mean"], dtype="float64"),
-        np.asarray(meta["rotation"], dtype="float64"),
-        meta["dim"],
-        meta["id_col"],
-        meta["vec_col"],
-    )
-
-
-# --------------------------------------------------------------- IVF-OPQ
-# The FAISS `OPQMatrix + IVFPQ` stack (IndexPreTransform): learn the OPQ
-# rotation, move the WHOLE index into the rotated frame — coarse
-# quantizer, residuals, and codebooks all live there — and rotate each
-# query once driver-side before the standard residual-ADC search.
-# Squared-L2 invariance under the orthogonal map means recall gates can
-# still compare against exact search in the ORIGINAL frame.
-
-
-@dataclass
-class IVFOPQIndex:
-    """Rotation + a plain residual IVF-PQ index over rotated vectors.
-
-    Everything downstream of the rotation is pq.IVFPQIndex unchanged —
-    coarse assignment, residual encoding, per-cell ADC, partitioned
-    save layout. The composition adds exactly one distributed rotate
-    pass at build/add time and one driver-side gemv per query.
-
-    Reference parity: /root/reference/local_db.py:49-52 delegates its
-    index to FAISS, whose recommended recipe for anisotropic embedding
-    spaces is exactly OPQ{m}+IVF{nlist},PQ{m} — this is that recipe,
-    Spark-first."""
-
-    ivfpq: "pq.IVFPQIndex"  # trained & encoded in the ROTATED frame
-    mean: np.ndarray
-    rotation: np.ndarray  # [dim, dim] orthogonal
-    dim: int
-    id_col: str
-    vec_col: str
+    return Rotated(inner, mean, rotation, vec_col)
 
 
 def build_ivfopq(
@@ -334,7 +205,7 @@ def build_ivfopq(
     dim: int | None = None,
     seed: int = 42,
     cache: bool = True,
-) -> IVFOPQIndex:
+) -> Rotated:
     """learn_rotation → distributed rotate → ann.build_ivf on the
     rotated corpus → pq.build_ivfpq residual codebooks, all reused
     kernels. Training cost is O(sample) driver-side (rotation SVD +
@@ -342,120 +213,44 @@ def build_ivfopq(
     one rotate+assign+encode scan."""
     from homemade_vector_db_spark.operators import ann
 
-    if dim is None:
-        first = df.select(vec_col).first()
-        if first is None:
-            raise ValueError("cannot build IVF-OPQ index on empty table")
-        dim = len(first[0])
-    mean, rotation = learn_rotation(
-        df, m, dim, id_col=id_col, vec_col=vec_col
-    )
-    rotated = rotate(df, mean, rotation, id_col, vec_col)
+    dim = vector_dim(df, vec_col, dim)
+    mean, rotation = learn_rotation(df, m, dim, id_col, vec_col)
     ivf = ann.build_ivf(
-        rotated, id_col=id_col, vec_col="__rot", nlist=nlist, seed=seed,
-        cache=False,
+        rotate(df, mean, rotation, id_col, vec_col), id_col=id_col,
+        vec_col="__rot", nlist=nlist, seed=seed, cache=False,
     )
     inner = pq.build_ivfpq(
         ivf, m=m, codebook_size=codebook_size, dim=dim, seed=seed,
         cache=cache,
     )
-    return IVFOPQIndex(inner, mean, rotation, dim, id_col, vec_col)
+    return Rotated(inner, mean, rotation, vec_col)
 
 
-def _rotate_query(index: IVFOPQIndex, query: Sequence[float]) -> list:
+# the inner tier's (search, add) — both operate in the rotated frame
+_INNER_OPS = {
+    pq.PQIndex: (pq.pq_search, pq.pq_add),
+    pq.IVFPQIndex: (pq.ivfpq_search, pq.ivfpq_add),
+}
+
+
+def rotated_search(
+    index: Rotated, query: Sequence[float], k: int = 10, **kw
+) -> DataFrame:
+    """Rotate the query driver-side (one gemv — the FAISS OPQMatrix
+    apply), then the inner tier's ADC search (`kw`: its nprobe /
+    score_decimals) — per-query cost identical to the unrotated tier."""
     q = np.asarray(list(query), dtype="float64")
-    return (index.rotation @ (q - index.mean)).tolist()
+    qr = (index.rotation @ (q - index.mean)).tolist()
+    search, _ = _INNER_OPS[type(index.inner)]
+    return search(index.inner, qr, k=k, **kw)
 
 
-def ivfopq_search(
-    index: IVFOPQIndex,
-    query: Sequence[float],
-    k: int = 10,
-    nprobe: int = 4,
-    score_decimals: int | None = 6,
-) -> DataFrame:
-    """Rotate the query (one gemv), then the standard rotated-frame
-    residual-ADC probe/merge/top-k — per-query cost identical to plain
-    IVF-PQ."""
-    return pq.ivfpq_search(
-        index.ivfpq, _rotate_query(index, query), k=k, nprobe=nprobe,
-        score_decimals=score_decimals,
-    )
-
-
-def ivfopq_rerank_search(
-    index: IVFOPQIndex,
-    df: DataFrame,
-    query: Sequence[float],
-    k: int = 10,
-    nprobe: int = 4,
-    overfetch: int = 4,
-) -> DataFrame:
-    """Rotated-frame ADC shortlist over the probed cells → exact rerank
-    on the RAW vectors in the ORIGINAL frame (squared-L2 is
-    rotation-invariant, so original-frame exact distances rank
-    identically — the corpus is never rotated a second time)."""
-    from homemade_vector_db_spark.operators.knn import knn_exact
-    from pyspark.sql import functions as F
-
-    shortlist = ivfopq_search(
-        index, query, k=k * overfetch, nprobe=nprobe, score_decimals=None
-    ).select(index.id_col)
-    candidates = df.join(F.broadcast(shortlist), index.id_col)
-    return knn_exact(
-        candidates, list(query), id_col=index.id_col,
-        vec_col=index.vec_col, k=k, dim=index.dim,
-    )
-
-
-def ivfopq_add(index: IVFOPQIndex, new_df: DataFrame, cache: bool = True) -> IVFOPQIndex:
-    """Add-after-train: rotate the batch with the FROZEN geometry, then
-    pq.ivfpq_add (assign to existing cells, encode residuals with
-    existing codebooks). One distributed rotate+encode pass over the
-    new rows only — the opq_add/sq_add/bq_add discipline."""
-    from dataclasses import replace
-
+def rotated_add(index: Rotated, new_df: DataFrame) -> Rotated:
+    """Add-after-train: rotate the batch with the FROZEN rotation, then
+    the inner tier's add (frozen cells and codebooks). One distributed
+    rotate + encode pass over the new rows only."""
     rotated = rotate(
         new_df, index.mean, index.rotation, index.id_col, index.vec_col
     )
-    return replace(
-        index, ivfpq=pq.ivfpq_add(index.ivfpq, rotated, cache=cache)
-    )
-
-
-def save_ivfopq(index: IVFOPQIndex, path: str) -> None:
-    """Persist the full stack: the inner IVF-PQ state (codes
-    partitionBy('cluster') + geometry JSON, pq.save_ivfpq) plus the
-    rotation sidecar — the save_opq layout over the IVF-PQ layout."""
-    import json
-    import os
-
-    pq.save_ivfpq(index.ivfpq, path)
-    with open(os.path.join(path, "opq.json"), "w") as f:
-        json.dump(
-            {
-                "mean": index.mean.tolist(),
-                "rotation": index.rotation.tolist(),
-                "dim": index.dim,
-                "id_col": index.id_col,
-                "vec_col": index.vec_col,
-            },
-            f,
-        )
-
-
-def load_ivfopq(spark, path: str) -> IVFOPQIndex:
-    import json
-    import os
-
-    with open(os.path.join(path, "opq.json")) as f:
-        meta = json.load(f)
-    inner = pq.load_ivfpq(spark, path)
-    return IVFOPQIndex(
-        inner,
-        np.asarray(meta["mean"], dtype="float64"),
-        np.asarray(meta["rotation"], dtype="float64"),
-        meta["dim"],
-        meta["id_col"],
-        meta["vec_col"],
-    )
+    _, add = _INNER_OPS[type(index.inner)]
+    return replace(index, inner=add(index.inner, rotated))

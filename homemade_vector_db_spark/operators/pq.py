@@ -26,11 +26,13 @@ top candidates if desired. Recall-tested vs the exact operator
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from homemade_vector_db_spark.operators.tier import vector_dim
 
 
 @dataclass
@@ -70,22 +72,14 @@ def build_pq(
     """
     import numpy as np
 
-    if dim is None:
-        first = df.select(vec_col).first()
-        if first is None:
-            raise ValueError("cannot build PQ index on empty table")
-        dim = len(first[0])
+    dim = vector_dim(df, vec_col, dim)
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     sub = dim // m
     n = df.count()
     k = max(1, min(codebook_size, n // 2))
 
-    subcols = [
-        F.slice(F.col(vec_col), i * sub + 1, sub).cast("array<double>").alias(f"__s{i}")
-        for i in range(m)
-    ]
-    base = df.select(F.col(id_col), *subcols)
+    base = df.select(F.col(id_col), *_subvectors(F.col(vec_col), m, sub))
 
     # deterministic UNBIASED training sample: top-k by hash of the id (not
     # id order — head-of-table slices are biased when the corpus is sorted
@@ -105,6 +99,29 @@ def build_pq(
     if cache:
         codes = codes.cache()
     return PQIndex(codes, codebooks, m, dim, id_col, vec_col)
+
+
+def _subvectors(vec, m: int, sub: int) -> list:
+    """The m contiguous `__s{i}` sub-vector columns PQ trains and encodes."""
+    return [
+        F.slice(vec, i * sub + 1, sub).cast("array<double>").alias(f"__s{i}")
+        for i in range(m)
+    ]
+
+
+def pq_add(index: PQIndex, new_df: DataFrame) -> PQIndex:
+    """Add-after-train: encode an appended row block with the FROZEN
+    codebooks (geometry never depended on individual rows, so the union
+    of code relations equals a re-encode of the union). One distributed
+    encode pass over the new rows only."""
+    sub = index.dim // index.m
+    base = new_df.select(
+        F.col(index.id_col), *_subvectors(F.col(index.vec_col), index.m, sub)
+    )
+    new_codes = _encode(
+        base, index.codebooks, sub, index.id_col, new_df.sparkSession
+    )
+    return replace(index, codes=index.codes.unionByName(new_codes))
 
 
 def _lloyd(X, k: int, seed: int, iters: int = 12):
@@ -214,65 +231,6 @@ def pq_search(
     )
 
 
-def pq_rerank_search(
-    index: PQIndex,
-    df: DataFrame,
-    query: Sequence[float],
-    k: int = 10,
-    overfetch: int = 4,
-) -> DataFrame:
-    """ADC shortlist (k·overfetch candidates) → exact rerank on raw vectors.
-
-    The standard PQ recall fix: the compressed scan bounds work, the exact
-    pass touches only k·overfetch rows (a broadcast-joinable id set).
-    """
-    from homemade_vector_db_spark.operators.knn import knn_exact
-
-    shortlist = pq_search(index, query, k=k * overfetch, score_decimals=None).select(
-        index.id_col
-    )
-    candidates = df.join(F.broadcast(shortlist), index.id_col)
-    return knn_exact(
-        candidates, list(query), id_col=index.id_col, vec_col=index.vec_col, k=k
-    )
-
-
-def save_pq(index: PQIndex, path: str) -> None:
-    """Persist PQ state (O8 parity for the IVFPQ half of faiss.idx,
-    /root/reference/local_db.py:218-221): codes as parquet (m bytes of
-    signal per row — the compressed representation IS the index), tiny
-    codebooks + geometry as JSON. The raw vector table is NOT duplicated
-    here; rerank joins back to the caller's corpus table by id."""
-    import json
-    import os
-
-    index.codes.write.mode("overwrite").parquet(os.path.join(path, "codes"))
-    with open(os.path.join(path, "pq.json"), "w") as f:
-        json.dump(
-            {
-                "codebooks": index.codebooks,
-                "m": index.m,
-                "dim": index.dim,
-                "id_col": index.id_col,
-                "vec_col": index.vec_col,
-            },
-            f,
-        )
-
-
-def load_pq(spark, path: str) -> PQIndex:
-    import json
-    import os
-
-    with open(os.path.join(path, "pq.json")) as f:
-        meta = json.load(f)
-    codes = spark.read.parquet(os.path.join(path, "codes"))
-    return PQIndex(
-        codes, meta["codebooks"], meta["m"], meta["dim"],
-        meta["id_col"], meta["vec_col"],
-    )
-
-
 def _residual_expr(centroids, vec_col: str):
     """x − centroid(cluster) as a pure codegen projection (the centroid
     table constant-folds into a literal array indexed by the cluster
@@ -308,10 +266,9 @@ def encode_with_geometry(
     m = len(codebooks)
     sub = dim // m
     resid = _residual_expr(centroids, vec_col)
-    subcols = [
-        F.slice(resid, i * sub + 1, sub).alias(f"__s{i}") for i in range(m)
-    ]
-    base = assigned.select(F.col(id_col), F.col("cluster"), *subcols)
+    base = assigned.select(
+        F.col(id_col), F.col("cluster"), *_subvectors(resid, m, sub)
+    )
     return _encode(base, codebooks, sub, id_col, new_df.sparkSession).join(
         base.select(id_col, "cluster"), id_col
     )
@@ -327,9 +284,11 @@ class IVFPQIndex:
     ADC with the per-cell query residual q − centroid(cell) approximates
     the same ||q − x||²."""
 
-    pq: "PQIndex"  # codebooks trained on residuals; codes for ALL rows
-    codes_with_cluster: DataFrame  # (id, codes, cluster)
+    codes: DataFrame  # (id, codes ARRAY<SMALLINT>, cluster INT)
+    codebooks: list[list[list[float]]]  # trained on residuals
     centroids: list[list[float]]
+    m: int
+    dim: int
     id_col: str
     vec_col: str
 
@@ -358,13 +317,12 @@ def build_ivfpq(
         base, id_col=id_col, vec_col="__resid", m=m,
         codebook_size=codebook_size, dim=dim, seed=seed, cache=False,
     )
-    codes_with_cluster = pq.codes.join(
-        base.select(F.col(id_col), "cluster"), id_col
-    )
+    codes = pq.codes.join(base.select(F.col(id_col), "cluster"), id_col)
     if cache:
-        codes_with_cluster = codes_with_cluster.cache()
+        codes = codes.cache()
     return IVFPQIndex(
-        pq, codes_with_cluster, ivf_index.centroids, id_col, vec_col
+        codes, pq.codebooks, ivf_index.centroids, pq.m, pq.dim, id_col,
+        vec_col,
     )
 
 
@@ -376,137 +334,58 @@ def ivfpq_search(
     score_decimals: int | None = 6,
 ) -> DataFrame:
     """Probe the nprobe nearest cells in ONE scan: `cluster IN (probes)`
-    filter (partition PRUNING under the save_ivfpq layout), a per-row
-    residual-ADC score via a CASE over the probed cells' LUT literals,
-    then a single global TakeOrderedAndProject.
-
-    Round 13: previously one pq_search plan PER probed cell unioned and
-    re-selected — nprobe scans/stages whose per-cell top-k pruning could
-    even drop a row that would win a rounded-score tie in the merge.
-    The single-scan form is the FAISS single-phase select (scan probed
-    lists, one global heap), one job instead of nprobe, and applies the
-    engine-wide (rounded score DESC, id ASC) law to ALL probed rows.
-    Per-row arithmetic is unchanged: each cell's LUT chain is the same
-    left-associated m-term sum pq_search builds."""
+    filter (partition PRUNING under the tier.save_index layout), a
+    per-row residual-ADC score via a CASE over the probed cells' LUT
+    literals, then a single global TakeOrderedAndProject — the FAISS
+    single-phase select (scan probed lists, one global heap), one job,
+    with the engine-wide (rounded score DESC, id ASC) law over ALL probed
+    rows. Each cell's LUT chain is the same left-associated m-term sum
+    pq_search builds."""
     import numpy as np
 
     from homemade_vector_db_spark.functions.vector import _lit_d
+    from homemade_vector_db_spark.operators.ann import nearest_cells
 
     q = np.asarray(list(query), dtype="float64")
     cents = np.asarray(index.centroids, dtype="float64")
-    probe = np.argsort(((cents - q) ** 2).sum(axis=1))[: nprobe]
-    sub = index.pq.dim // index.pq.m
+    probe = nearest_cells(cents, q, nprobe)
+    sub = index.dim // index.m
     branches = []
     for c in probe:
         qr = q - cents[c]
         terms = []
-        for i in range(index.pq.m):
+        for i in range(index.m):
             qs = qr[i * sub : (i + 1) * sub]
-            cb = np.asarray(index.pq.codebooks[i], dtype="float64")
+            cb = np.asarray(index.codebooks[i], dtype="float64")
             lut = ((cb - qs) ** 2).sum(axis=1)
             lut_sql = "array(" + ", ".join(_lit_d(float(d)) for d in lut) + ")"
             terms.append(
                 f"element_at({lut_sql}, "
                 f"CAST(element_at(codes, {i + 1}) AS INT) + 1)"
             )
-        branches.append(f"WHEN {int(c)} THEN ({' + '.join(terms)})")
+        branches.append(f"WHEN {c} THEN ({' + '.join(terms)})")
     adc = F.expr("CASE cluster " + " ".join(branches) + " END")
     score = 1.0 / (1.0 + adc)
     if score_decimals is not None:
         score = F.round(score, score_decimals)
     return (
-        index.codes_with_cluster.where(
-            F.col("cluster").isin([int(c) for c in probe])
-        )
+        index.codes.where(F.col("cluster").isin(probe))
         .select(F.col(index.id_col), score.alias("score"))
         .orderBy(F.desc("score"), F.asc(index.id_col))
         .limit(k)
     )
 
 
-def ivfpq_add(index: IVFPQIndex, new_df: DataFrame, cache: bool = True) -> IVFPQIndex:
+def ivfpq_add(index: IVFPQIndex, new_df: DataFrame) -> IVFPQIndex:
     """Add-after-train (faiss IndexIVFPQ.add parity, the ivf_add stance):
     new rows are assigned to the EXISTING coarse cells and their
     residuals encoded with the EXISTING codebooks — no refit, one
     distributed encode pass over just the batch; rebuild on drift is the
-    caller's threshold policy. Codes are append-only, so under
-    save_ivfpq's partitionBy('cluster') layout an append lands in the
-    right partitions."""
-    id_col, vec_col = index.id_col, index.vec_col
+    caller's threshold policy. Codes are append-only, so under the
+    partitionBy('cluster') save layout an append lands in the right
+    partitions."""
     new_codes = encode_with_geometry(
-        new_df, index.centroids, index.pq.codebooks, index.pq.dim,
-        id_col, vec_col,
+        new_df, index.centroids, index.codebooks, index.dim,
+        index.id_col, index.vec_col,
     )
-    codes = index.codes_with_cluster.unionByName(new_codes)
-    if cache:
-        codes = codes.cache()
-    pq = PQIndex(
-        codes.select(id_col, "codes"), index.pq.codebooks, index.pq.m,
-        index.pq.dim, id_col, vec_col,
-    )
-    return IVFPQIndex(pq, codes, index.centroids, id_col, vec_col)
-
-
-def save_ivfpq(index: IVFPQIndex, path: str) -> None:
-    """Persist the full IVF-PQ state (O8 parity for the reference's
-    faiss.idx IVFPQ case, /root/reference/local_db.py:218-221): codes
-    written partitionBy('cluster') so a query-time nprobe cell scan is
-    partition PRUNING, not a filter (the save_ivf stance); residual
-    codebooks + coarse centroids + geometry as JSON. Raw vectors are
-    never duplicated — rerank joins back to the caller's corpus by id."""
-    import json
-    import os
-
-    index.codes_with_cluster.write.mode("overwrite").partitionBy(
-        "cluster"
-    ).parquet(os.path.join(path, "codes"))
-    with open(os.path.join(path, "ivfpq.json"), "w") as f:
-        json.dump(
-            {
-                "codebooks": index.pq.codebooks,
-                "m": index.pq.m,
-                "dim": index.pq.dim,
-                "centroids": index.centroids,
-                "id_col": index.id_col,
-                "vec_col": index.vec_col,
-            },
-            f,
-        )
-
-
-def load_ivfpq(spark, path: str) -> IVFPQIndex:
-    import json
-    import os
-
-    with open(os.path.join(path, "ivfpq.json")) as f:
-        meta = json.load(f)
-    codes = spark.read.parquet(os.path.join(path, "codes"))
-    pq = PQIndex(
-        codes.select(meta["id_col"], "codes"),
-        meta["codebooks"], meta["m"], meta["dim"],
-        meta["id_col"], meta["vec_col"],
-    )
-    return IVFPQIndex(
-        pq, codes, meta["centroids"], meta["id_col"], meta["vec_col"]
-    )
-
-
-def ivfpq_rerank_search(
-    index: IVFPQIndex,
-    df: DataFrame,
-    query: Sequence[float],
-    k: int = 10,
-    nprobe: int = 4,
-    overfetch: int = 4,
-) -> DataFrame:
-    """Residual-ADC shortlist over the probed cells → exact rerank."""
-    from homemade_vector_db_spark.operators.knn import knn_exact
-
-    shortlist = ivfpq_search(
-        index, query, k=k * overfetch, nprobe=nprobe, score_decimals=None
-    ).select(index.id_col)
-    candidates = df.join(F.broadcast(shortlist), index.id_col)
-    return knn_exact(
-        candidates, list(query), id_col=index.id_col,
-        vec_col=index.vec_col, k=k, dim=index.pq.dim,
-    )
+    return replace(index, codes=index.codes.unionByName(new_codes))

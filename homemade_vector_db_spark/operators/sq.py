@@ -27,11 +27,13 @@ operator (tests/test_sq.py, queries.sq_recall), not hash equality.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from homemade_vector_db_spark.operators.tier import vector_dim
 
 LEVELS = 255  # 8-bit code points 0..255
 
@@ -54,35 +56,42 @@ def build_sq(
     cache: bool = True,
 ) -> SQIndex:
     """Fit per-dimension ranges (one distributed agg) and encode."""
-    if dim is None:
-        first = df.select(vec_col).first()
-        if first is None:
-            raise ValueError("cannot build SQ index on empty table")
-        dim = len(first[0])
+    dim = vector_dim(df, vec_col, dim)
+    mins, maxs = dim_ranges(df, vec_col, dim)
+    scales = [(mx - mn) / LEVELS or 1.0 for mn, mx in zip(mins, maxs)]
 
+    codes = df.select(F.col(id_col), _codes_expr(vec_col, mins, scales))
+    if cache:
+        codes = codes.cache()
+    return SQIndex(codes, mins, scales, dim, id_col, vec_col)
+
+
+def dim_ranges(
+    df: DataFrame, vec_col: str, dim: int
+) -> tuple[list[float], list[float]]:
+    """Per-dimension (mins, maxs) via one distributed agg — exact,
+    order-independent float comparisons, so the geometry is the same
+    under any partitioning."""
     aggs = []
     for i in range(1, dim + 1):
         e = F.element_at(F.col(vec_col), i)
         aggs.append(F.min(e).alias(f"mn{i}"))
         aggs.append(F.max(e).alias(f"mx{i}"))
     row = df.agg(*aggs).first()
-    mins = [float(row[f"mn{i}"]) for i in range(1, dim + 1)]
-    scales = [
-        (float(row[f"mx{i}"]) - mins[i - 1]) / LEVELS or 1.0
-        for i in range(1, dim + 1)
-    ]
+    return (
+        [float(row[f"mn{i}"]) for i in range(1, dim + 1)],
+        [float(row[f"mx{i}"]) for i in range(1, dim + 1)],
+    )
 
-    code_exprs = [
+
+def _codes_expr(vec_col: str, mins: list[float], scales: list[float]):
+    """`codes`: each dimension mapped linearly onto its trained range."""
+    return F.array(*[
         F.round(
-            (F.element_at(F.col(vec_col), i).cast("double") - mins[i - 1])
-            / scales[i - 1]
+            (F.element_at(F.col(vec_col), i + 1).cast("double") - mn) / sc
         ).cast("int")
-        for i in range(1, dim + 1)
-    ]
-    codes = df.select(F.col(id_col), F.array(*code_exprs).alias("codes"))
-    if cache:
-        codes = codes.cache()
-    return SQIndex(codes, mins, scales, dim, id_col, vec_col)
+        for i, (mn, sc) in enumerate(zip(mins, scales))
+    ]).alias("codes")
 
 
 def sq_search(
@@ -119,63 +128,6 @@ def sq_search(
     )
 
 
-def sq_rerank_search(
-    index: SQIndex,
-    df: DataFrame,
-    query: Sequence[float],
-    k: int = 10,
-    pool: int = 100,
-    score_decimals: int | None = 6,
-) -> DataFrame:
-    """ADC shortlist (`pool` candidates) → exact full-precision rerank —
-    the production SQ pipeline shape (compressed scan bounds the exact
-    arithmetic to `pool` rows)."""
-    from homemade_vector_db_spark.operators.knn import knn_exact
-
-    shortlist = sq_search(index, query, k=pool, score_decimals=None).select(
-        index.id_col
-    )
-    cand = df.join(F.broadcast(shortlist), index.id_col)
-    return knn_exact(
-        cand, list(query), id_col=index.id_col, vec_col=index.vec_col,
-        k=k, dim=index.dim, score_decimals=score_decimals,
-    )
-
-
-def save_sq(index: SQIndex, path: str) -> None:
-    """Persist SQ state (same O8 shape as pq.save_pq): codes parquet +
-    tiny range geometry as JSON. The raw vector table is NOT duplicated;
-    rerank joins back to the caller's corpus table by id."""
-    import json
-    import os
-
-    index.codes.write.mode("overwrite").parquet(os.path.join(path, "codes"))
-    with open(os.path.join(path, "sq.json"), "w") as f:
-        json.dump(
-            {
-                "mins": index.mins,
-                "scales": index.scales,
-                "dim": index.dim,
-                "id_col": index.id_col,
-                "vec_col": index.vec_col,
-            },
-            f,
-        )
-
-
-def load_sq(spark, path: str) -> SQIndex:
-    import json
-    import os
-
-    with open(os.path.join(path, "sq.json")) as f:
-        meta = json.load(f)
-    codes = spark.read.parquet(os.path.join(path, "codes"))
-    return SQIndex(
-        codes, meta["mins"], meta["scales"], meta["dim"],
-        meta["id_col"], meta["vec_col"],
-    )
-
-
 def sq_add(index: SQIndex, new_df: DataFrame) -> SQIndex:
     """Encode NEW vectors with the EXISTING [min,max] range geometry and
     union into the codes — FAISS add-after-train semantics (no refit),
@@ -183,22 +135,8 @@ def sq_add(index: SQIndex, new_df: DataFrame) -> SQIndex:
     the new batch produce codes outside [0, 255] (the linear map is not
     clamped); ADC stays well-defined and exact re-encoding on the next
     full rebuild restores the tight range."""
-    code_exprs = [
-        F.round(
-            (F.element_at(F.col(index.vec_col), i).cast("double")
-             - index.mins[i - 1])
-            / index.scales[i - 1]
-        ).cast("int")
-        for i in range(1, index.dim + 1)
-    ]
     new_codes = new_df.select(
-        F.col(index.id_col), F.array(*code_exprs).alias("codes")
+        F.col(index.id_col),
+        _codes_expr(index.vec_col, index.mins, index.scales),
     )
-    return SQIndex(
-        index.codes.unionByName(new_codes),
-        index.mins,
-        index.scales,
-        index.dim,
-        index.id_col,
-        index.vec_col,
-    )
+    return replace(index, codes=index.codes.unionByName(new_codes))

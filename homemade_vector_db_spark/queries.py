@@ -40,6 +40,7 @@ from homemade_vector_db_spark.operators import (
     metadata,
     nndescent,
     textstats,
+    tier,
 )
 from homemade_vector_db_spark.sources.tables import (
     docs_with_embeddings,
@@ -4236,10 +4237,11 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from homemade_vector_db_spark.operators import pq as pqmod
 
     q = _qvec_list(spark, sf_dir)
-    return pqmod.ivfpq_rerank_search(
-        _ivfpq_index(spark, sf_dir), load_embeddings(spark, sf_dir),
-        q, k=TOP_K, nprobe=8, overfetch=8,
+    shortlist = pqmod.ivfpq_search(
+        _ivfpq_index(spark, sf_dir), q, k=8 * TOP_K, nprobe=8,
+        score_decimals=None,
     )
+    return tier.rerank(shortlist, load_embeddings(spark, sf_dir), q, TOP_K)
 
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4862,7 +4864,7 @@ def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SHORTLIST recall of PQ ADC search: the exact top-k must be ≥50%
     contained in the ADC top-10k shortlist. This is the metric that
     matters for PQ in production — ADC is a shortlist generator feeding
-    exact rerank (see q_ivfpq_recall / pq_rerank_search), and top-k-vs-
+    exact rerank (see q_ivfpq_recall / tier.rerank), and top-k-vs-
     top-k recall of raw ADC degrades with corpus size by construction
     (quantization error vs ever-tighter true top-k) while shortlist
     containment stays stable (measured 1.0 / 0.7 at sf0.01 / sf0.1)."""
@@ -4900,7 +4902,7 @@ def q_opq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     embs = load_embeddings(spark, sf_dir)
     q = list(embs.where(F.col("vec_id") == 0).first().embedding)
-    shortlist = opqmod.opq_search(
+    shortlist = opqmod.rotated_search(
         _opq_index(spark, sf_dir), q, k=10 * TOP_K
     ).select("vec_id")
     exact = knn.knn_exact(embs, q, k=TOP_K, dim=EMB_DIM).select("vec_id")
@@ -4921,9 +4923,11 @@ def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     embs = load_embeddings(spark, sf_dir)
     q = _qvec_list(spark, sf_dir)
-    approx = pqmod.ivfpq_rerank_search(
-        _ivfpq_index(spark, sf_dir), embs, q, k=TOP_K, nprobe=8, overfetch=8
-    ).select("vec_id")
+    shortlist = pqmod.ivfpq_search(
+        _ivfpq_index(spark, sf_dir), q, k=8 * TOP_K, nprobe=8,
+        score_decimals=None,
+    )
+    approx = tier.rerank(shortlist, embs, q, TOP_K).select("vec_id")
     exact = knn.knn_exact(embs, q, k=TOP_K, dim=EMB_DIM).select("vec_id")
     return _recall_gate(approx, exact, TOP_K)
 
@@ -4943,9 +4947,11 @@ def q_ivfopq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     embs = load_embeddings(spark, sf_dir)
     q = _qvec_list(spark, sf_dir)
-    approx = opqmod.ivfopq_rerank_search(
-        _ivfopq_index(spark, sf_dir), embs, q, k=TOP_K, nprobe=8, overfetch=8
-    ).select("vec_id")
+    shortlist = opqmod.rotated_search(
+        _ivfopq_index(spark, sf_dir), q, k=8 * TOP_K, nprobe=8,
+        score_decimals=None,
+    )
+    approx = tier.rerank(shortlist, embs, q, TOP_K).select("vec_id")
     exact = knn.knn_exact(embs, q, k=TOP_K, dim=EMB_DIM).select("vec_id")
     return _recall_gate(approx, exact, TOP_K)
 
@@ -12726,9 +12732,8 @@ def q_bq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     embs = load_embeddings(spark, sf_dir)
     q = _qvec_list(spark, sf_dir)
-    approx = bqmod.bq_rerank_search(
-        _bq_index(spark, sf_dir), embs, q, k=TOP_K, pool=10 * TOP_K
-    ).select("vec_id")
+    shortlist = bqmod.bq_search(_bq_index(spark, sf_dir), q, k=10 * TOP_K)
+    approx = tier.rerank(shortlist, embs, q, TOP_K).select("vec_id")
     exact = knn.knn_exact(embs, q, k=TOP_K, dim=EMB_DIM).select("vec_id")
     return _recall_gate(approx, exact, TOP_K)
 
@@ -12754,10 +12759,10 @@ def q_ivfbq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     embs = load_embeddings(spark, sf_dir)
     q = _qvec_list(spark, sf_dir)
-    approx = bqmod.ivfbq_search(
-        _ivfbq_index(spark, sf_dir), embs, q, k=TOP_K, nprobe=8,
-        pool=10 * TOP_K,
-    ).select("vec_id")
+    shortlist = bqmod.ivfbq_search(
+        _ivfbq_index(spark, sf_dir), q, k=10 * TOP_K, nprobe=8
+    )
+    approx = tier.rerank(shortlist, embs, q, TOP_K).select("vec_id")
     exact = knn.knn_exact(embs, q, k=TOP_K, dim=EMB_DIM).select("vec_id")
     return _recall_gate(approx, exact, TOP_K)
 

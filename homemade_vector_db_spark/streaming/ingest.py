@@ -473,24 +473,20 @@ class IncrementalPQIndex:
             ivf, m=m, codebook_size=codebook_size, cache=False
         )
         out = cls(
-            seed_df.sparkSession, root, idx.centroids, idx.pq.codebooks,
-            idx.pq.dim, id_col, vec_col,
+            seed_df.sparkSession, root, idx.centroids, idx.codebooks,
+            idx.dim, id_col, vec_col,
         )
-        idx.codes_with_cluster.write.mode("overwrite").partitionBy(
-            "cluster"
-        ).parquet(os.path.join(out.codes_path, "batch=seed"))
+        idx.codes.write.mode("overwrite").partitionBy("cluster").parquet(
+            os.path.join(out.codes_path, "batch=seed")
+        )
         return out
 
     def _index(self, codes: DataFrame):
-        from homemade_vector_db_spark.operators.pq import IVFPQIndex, PQIndex
+        from homemade_vector_db_spark.operators.pq import IVFPQIndex
 
-        pq = PQIndex(
-            codes.select(self.id_col, "codes"),
-            self.codebooks, len(self.codebooks), self.dim,
-            self.id_col, self.vec_col,
-        )
         return IVFPQIndex(
-            pq, codes, self.centroids, self.id_col, self.vec_col
+            codes, self.codebooks, self.centroids, len(self.codebooks),
+            self.dim, self.id_col, self.vec_col,
         )
 
     def encode_batch(self, batch: DataFrame) -> DataFrame:
@@ -532,11 +528,13 @@ class IncrementalPQIndex:
     ) -> DataFrame:
         """ADC shortlist over probed cells + exact rerank against the
         caller's vector table (codes never store raw vectors)."""
-        from homemade_vector_db_spark.operators import pq
+        from homemade_vector_db_spark.operators import pq, tier
 
-        return pq.ivfpq_rerank_search(
-            self.index(), df, query, k=k, nprobe=nprobe, overfetch=overfetch
+        shortlist = pq.ivfpq_search(
+            self.index(), query, k=k * overfetch, nprobe=nprobe,
+            score_decimals=None,
         )
+        return tier.rerank(shortlist, df, query, k, self.id_col, self.vec_col)
 
     def attach_stream(self, stream: DataFrame, checkpoint: str | None = None):
         return (
@@ -563,8 +561,8 @@ class IncrementalOPQIndex(IncrementalPQIndex):
     each micro-batch with the frozen orthogonal matrix (one distributed
     gemv/codegen pass, opq.rotate) before the shared
     pq.encode_with_geometry path — the same single encode definition
-    behind ivfopq_add; search reranks exactly in the ORIGINAL frame via
-    opq.ivfopq_rerank_search. Rotation / codebook refresh stays a
+    behind opq.rotated_add; search reranks exactly in the ORIGINAL frame
+    via tier.rerank. Rotation / codebook refresh stays a
     drift-policy rebuild, never a per-batch cost."""
 
     def __init__(
@@ -606,34 +604,25 @@ class IncrementalOPQIndex(IncrementalPQIndex):
         )
         out = cls(
             seed_df.sparkSession, root, idx.mean, idx.rotation,
-            idx.ivfpq.centroids, idx.ivfpq.pq.codebooks, idx.dim,
+            idx.inner.centroids, idx.inner.codebooks, idx.dim,
             id_col, vec_col,
         )
-        idx.ivfpq.codes_with_cluster.write.mode("overwrite").partitionBy(
-            "cluster"
-        ).parquet(os.path.join(out.codes_path, "batch=seed"))
+        idx.inner.codes.write.mode("overwrite").partitionBy("cluster").parquet(
+            os.path.join(out.codes_path, "batch=seed")
+        )
         return out
 
     def _index(self, codes: DataFrame):
-        from homemade_vector_db_spark.operators.opq import IVFOPQIndex
-        from homemade_vector_db_spark.operators.pq import IVFPQIndex, PQIndex
+        from dataclasses import replace
 
-        pq = PQIndex(
-            codes.select(self.id_col, "codes"),
-            self.codebooks, len(self.codebooks), self.dim,
-            self.id_col, "__rot",
-        )
-        inner = IVFPQIndex(
-            pq, codes, self.centroids, self.id_col, "__rot"
-        )
-        return IVFOPQIndex(
-            inner, self.mean, self.rotation, self.dim,
-            self.id_col, self.vec_col,
-        )
+        from homemade_vector_db_spark.operators.opq import Rotated
+
+        inner = replace(super()._index(codes), vec_col="__rot")
+        return Rotated(inner, self.mean, self.rotation, self.vec_col)
 
     def encode_batch(self, batch: DataFrame) -> DataFrame:
         """(id, codes, cluster) for one batch under the FIXED geometry —
-        rotate with the frozen OPQ matrix, then exactly ivfopq_add's
+        rotate with the frozen OPQ matrix, then exactly rotated_add's
         encode path (shared pq.encode_with_geometry definition)."""
         from homemade_vector_db_spark.operators import opq, pq
 
@@ -651,12 +640,13 @@ class IncrementalOPQIndex(IncrementalPQIndex):
     ) -> DataFrame:
         """Rotated-frame ADC shortlist over probed cells + exact rerank
         against the caller's RAW vector table in the original frame."""
-        from homemade_vector_db_spark.operators import opq
+        from homemade_vector_db_spark.operators import opq, tier
 
-        return opq.ivfopq_rerank_search(
-            self.index(), df, query, k=k, nprobe=nprobe,
-            overfetch=overfetch,
+        shortlist = opq.rotated_search(
+            self.index(), query, k=k * overfetch, nprobe=nprobe,
+            score_decimals=None,
         )
+        return tier.rerank(shortlist, df, query, k, self.id_col, self.vec_col)
 
 
 def windowed_event_counts(

@@ -4,7 +4,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from homemade_vector_db_spark.operators import ann
+from homemade_vector_db_spark.operators import ann, tier
 from homemade_vector_db_spark.operators.knn import knn_exact
 from homemade_vector_db_spark.sources.tables import load_embeddings
 from tests.conftest import SF_SMOKE
@@ -73,8 +73,8 @@ def test_ivf_save_load_roundtrip(spark, embs, qvec, tmp_path):
     idx = ann.build_ivf(embs, nlist=16)
     want = [(r.vec_id, r.score) for r in ann.ivf_search(idx, qvec, k=5).collect()]
     path = str(tmp_path / "ivf_idx")
-    ann.save_ivf(idx, path)
-    idx2 = ann.load_ivf(spark, path)
+    tier.save_index(idx, path)
+    idx2 = tier.load_index(spark, path)
     assert idx2.nlist == idx.nlist
     got = [(r.vec_id, r.score) for r in ann.ivf_search(idx2, qvec, k=5).collect()]
     assert got == want
@@ -84,13 +84,18 @@ def test_ivf_save_load_roundtrip(spark, embs, qvec, tmp_path):
     assert glob.glob(path + "/assignments/cluster=*"), "expected partitioned layout"
 
 
-def test_lsh_save_load_roundtrip(spark, embs, qvec, tmp_path):
+def test_lsh_planes_depend_only_on_seed_and_dim(spark, embs, qvec):
+    """Why the lsh tier is rebuilt rather than saved: the fitted planes
+    are a function of (seed, dim), so a rebuild over the same corpus is
+    the same index, whatever corpus the first fit saw."""
     idx = ann.build_lsh(embs)
+    other = ann.build_lsh(embs.where(F.col("vec_id") < 50))
+    rehashed = other.model.transform(idx.hashed.drop("__hashes"))
+    want = {r.vec_id: r["__hashes"] for r in idx.hashed.collect()}
+    assert {r.vec_id: r["__hashes"] for r in rehashed.collect()} == want
+    again = ann.build_lsh(embs)
     want = [(r.vec_id, r.score) for r in ann.lsh_search(idx, qvec, k=5).collect()]
-    path = str(tmp_path / "lsh_idx")
-    ann.save_lsh(idx, path)
-    idx2 = ann.load_lsh(spark, path, embs)
-    got = [(r.vec_id, r.score) for r in ann.lsh_search(idx2, qvec, k=5).collect()]
+    got = [(r.vec_id, r.score) for r in ann.lsh_search(again, qvec, k=5).collect()]
     assert got == want
 
 
@@ -334,8 +339,8 @@ def test_nsw_add_save_load_roundtrip(spark, embs, qvec, tmp_path):
 
     idx = nsw.build_nsw(embs.where(F.col("vec_id") < 450), rows_per_shard=150)
     added = nsw.nsw_add(idx, embs.where(F.col("vec_id") >= 450))
-    nsw.save_nsw(added, str(tmp_path / "g"))
-    loaded = nsw.load_nsw(spark, str(tmp_path / "g"))
+    tier.save_index(added, str(tmp_path / "g"))
+    loaded = tier.load_index(spark, str(tmp_path / "g"))
     assert loaded.n_shards == added.shard_count()
     a = [(r.vec_id, r.score) for r in nsw.nsw_search(added, qvec, k=5).collect()]
     b = [(r.vec_id, r.score) for r in nsw.nsw_search(loaded, qvec, k=5).collect()]

@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from homemade_vector_db_spark.operators import bq
+from homemade_vector_db_spark.operators import bq, tier
 from homemade_vector_db_spark.operators.knn import knn_exact
 from homemade_vector_db_spark.sources.tables import load_embeddings
 from tests.conftest import SF_SMOKE
@@ -72,7 +72,8 @@ def test_hamming_equals_sign_disagreement(embs, idx, qvec):
 def test_rerank_recall(embs, idx, qvec):
     approx = [
         r.vec_id
-        for r in bq.bq_rerank_search(idx, embs, qvec, k=10, pool=100).collect()
+        for r in tier.rerank(bq.bq_search(idx, qvec, k=100), embs, qvec, 10)
+        .collect()
     ]
     exact = [r.vec_id for r in knn_exact(embs, qvec, k=10, dim=64).collect()]
     assert len(set(approx) & set(exact)) / 10 >= 0.5
@@ -90,8 +91,8 @@ def test_build_invariant_under_repartition(embs, qvec, idx):
 
 
 def test_save_load_roundtrip(tmp_path, spark, embs, idx, qvec):
-    bq.save_bq(idx, str(tmp_path))
-    loaded = bq.load_bq(spark, str(tmp_path))
+    tier.save_index(idx, str(tmp_path))
+    loaded = tier.load_index(spark, str(tmp_path))
     want = [(r.vec_id, r.hamming) for r in bq.bq_search(idx, qvec, k=10).collect()]
     got = [(r.vec_id, r.hamming) for r in bq.bq_search(loaded, qvec, k=10).collect()]
     assert want == got
@@ -107,7 +108,9 @@ def test_ivfbq_probe_recall_and_probe_containment(spark, embs, qvec):
     ivf = ann.build_ivf(embs, nlist=4)
     idx = bq.build_ivfbq(ivf, dim=64)
     n = embs.count()
-    got = bq.ivfbq_search(idx, embs, qvec, k=10, nprobe=4, pool=n).collect()
+    got = tier.rerank(
+        bq.ivfbq_search(idx, qvec, k=n, nprobe=4), embs, qvec, 10
+    ).collect()
     # probing ALL cells + pool >= n means exact equality with flat knn
     exact = knn_exact(embs, qvec, k=10, dim=64).collect()
     assert [(r.vec_id, r.score) for r in got] == [
@@ -119,7 +122,9 @@ def test_ivfbq_probe_recall_and_probe_containment(spark, embs, qvec):
     cents = np.asarray(idx.centroids, dtype="float64")
     d2 = ((cents - np.asarray(qvec)) ** 2).sum(axis=1)
     probe = set(np.argsort(d2, kind="stable")[:1].tolist())
-    narrow = bq.ivfbq_search(idx, embs, qvec, k=10, nprobe=1, pool=50).collect()
+    narrow = tier.rerank(
+        bq.ivfbq_search(idx, qvec, k=50, nprobe=1), embs, qvec, 10
+    ).collect()
     cells = {
         r.vec_id: r.cluster
         for r in ivf.assignments.select("vec_id", "cluster").collect()

@@ -210,19 +210,78 @@ def test_ndv_sketch_accuracy(spark):
         assert abs(approx[t] - n) <= max(1, 0.05 * n)
 
 
-@pytest.mark.parametrize("index_type", ["lsh", "ivf", "sq8", "bq", "ivfbq"])
+@pytest.mark.parametrize(
+    "index_type",
+    ["lsh", "ivf", "ivfpq", "hnsw", "sq8", "bq", "ivfbq", "opq", "ivfopq"],
+)
 def test_save_load_with_ann_index(spark, tmp_path_factory, index_type):
-    d = VectorDatabase(spark, dim=4, index_type=index_type)
-    d.add(DOCS, VECS, METAS)
-    before = d.query_vector(VECS[2], top_k=3, return_scores=True)  # builds index
+    """A saved index reloads with its frozen geometry: after the same add
+    and delete, the loaded db answers exactly like the never-saved one.
+    The corpus outgrows the rerank pool and the probed cells, so the
+    answers depend on the reloaded codes, cells and codebooks."""
+    import json, os, random
+
+    rng = random.Random(13)
+    mk = lambda: [rng.uniform(-1, 1) for _ in range(8)]
+    vecs = [mk() for _ in range(240)]
+    d = VectorDatabase(spark, dim=8, index_type=index_type)
+    d.add([f"doc {i}" for i in range(240)], vecs)
+    q = vecs[17]
+    before = d.query_vector(q, top_k=3, return_scores=True)  # builds index
     path = str(tmp_path_factory.mktemp(f"dbsave_{index_type}"))
     d.save(path)
-    import json, os
-    with open(os.path.join(path, "manifest.json")) as f:
-        assert json.load(f)["has_ann_index"] is True
     d2 = VectorDatabase.load(spark, path)
-    assert d2._ann_index is not None  # reloaded, not rebuilt lazily
-    assert d2.query_vector(VECS[2], top_k=3, return_scores=True) == before
+    if index_type != "lsh":  # lsh is rebuilt from the corpus, not saved
+        with open(os.path.join(path, "manifest.json")) as f:
+            assert json.load(f)["has_ann_index"] is True
+        assert d2._ann_index is not None  # reloaded, not rebuilt lazily
+    assert d2.query_vector(q, top_k=3, return_scores=True) == before
+    late = [mk() for _ in range(6)]
+    for x in (d, d2):
+        x.add([f"late {i}" for i in range(6)], late)
+        x.delete([17, 241])
+    for v in (q, vecs[90], late[0], late[3]):
+        assert d2.query_vector(v, top_k=3, return_scores=True) == \
+            d.query_vector(v, top_k=3, return_scores=True)
+
+
+def test_load_v2_folder_rebuilds_index_lazily(spark, tmp_path):
+    """A format_version 2 folder keeps its documents and BM25 stats; its
+    ann/ dir (the per-tier layout older versions wrote) is ignored and
+    the index rebuilds lazily from the loaded corpus."""
+    import json, os
+
+    d = VectorDatabase(spark, dim=4, index_type="ivf")
+    d.add(DOCS, VECS, METAS)
+    d.query_text("meeting", top_k=2)  # builds the stats
+    want = d.query_vector(VECS[2], top_k=3, return_scores=True)
+    path = str(tmp_path / "v2")
+    d.save(path)
+    # the v2 ivf layout: cluster-partitioned assignments + ivf.json
+    os.remove(os.path.join(path, "ann", "index.json"))
+    with open(os.path.join(path, "ann", "ivf.json"), "w") as f:
+        json.dump({"centroids": d._ann_index.centroids, "id_col": "doc_id",
+                   "vec_col": "embedding"}, f)
+    with open(os.path.join(path, "manifest.json")) as f:
+        manifest = json.load(f)
+    manifest["format_version"] = 2
+    with open(os.path.join(path, "manifest.json"), "w") as f:
+        json.dump(manifest, f)
+
+    d2 = VectorDatabase.load(spark, path)
+    assert d2._stats is not None
+    assert d2._ann_index is None
+    assert d2.query_vector(VECS[2], top_k=3, return_scores=True) == want
+    assert d2._ann_index is not None  # rebuilt from the loaded corpus
+    assert d2.query_text("meeting team", top_k=3) == d.query_text(
+        "meeting team", top_k=3
+    )
+
+    manifest["format_version"] = 4
+    with open(os.path.join(path, "manifest.json"), "w") as f:
+        json.dump(manifest, f)
+    with pytest.raises(ValueError, match="format_version"):
+        VectorDatabase.load(spark, path)
 
 
 def test_incremental_add_extends_ivf_without_refit(spark):
@@ -599,29 +658,6 @@ def test_incremental_add_extends_hnsw_graph_without_rebuild(spark):
     assert db.query_vector(planted, top_k=1) == [60]
 
 
-def test_add_repairs_legacy_nsw_index(spark):
-    """db.add() on a legacy-loaded NSW index (pre-round-4 manifest,
-    n_shards=0) auto-rebalances before the incremental insert instead of
-    surfacing nsw_add's operator-level ValueError — the hard error stays
-    for direct operator use (ADVICE r6)."""
-    from dataclasses import replace
-
-    import numpy as np
-
-    rng = np.random.default_rng(9)
-    n, dim = 60, 8
-    vecs = [[float(x) for x in rng.normal(size=dim)] for _ in range(n)]
-    db = VectorDatabase(spark, dim=dim, index_type="hnsw", M=6, ef_search=40)
-    db.add([f"doc {i}" for i in range(n)], vecs)
-    db.query_vector(vecs[0], top_k=1)  # force index build
-    assert db._ann_index is not None
-    db._ann_index = replace(db._ann_index, n_shards=0)  # legacy shape
-    late = [float(x) for x in rng.normal(size=dim)]
-    db.add(["late arrival"], [late])  # no raise: add() repaired the index
-    assert db._ann_index.n_shards > 0
-    assert db.query_vector(late, top_k=1) == [n]
-
-
 def test_merge_equals_concatenated_build(spark):
     # merging two independently built dbs == one db built from the
     # concatenation: same ids, same BM25 ranking, same vector scores
@@ -704,8 +740,8 @@ def test_ivfpq_tier_end_to_end(spark, tmp_path):
     idx_before = db._ann_index
     db.add(["late"], [mk()])
     assert db._ann_index.centroids is idx_before.centroids
-    assert db._ann_index.pq.codebooks is idx_before.pq.codebooks
-    assert db._ann_index.codes_with_cluster.count() == 21
+    assert db._ann_index.codebooks is idx_before.codebooks
+    assert db._ann_index.codes.count() == 21
     path = str(tmp_path / "ivfpq_db")
     db.save(path)
     loaded = VectorDatabase.load(spark, path)
@@ -725,19 +761,24 @@ def _batch(rng, n, dim=4):
     return docs, [[rng.random() for _ in range(dim)] for _ in range(n)]
 
 
-def test_facade_storage_constant_across_add_cycles(spark, stored_rdds):
-    """Each add supersedes the corpus, the graph and the BM25 stats: over
-    add + query cycles executor storage holds exactly one corpus, one
-    graph and at most one stats set (four cached relations), instead of
-    one more stats set per cycle."""
+@pytest.mark.parametrize("index_type", ["hnsw", "ivfpq", "sq8"])
+def test_facade_storage_constant_across_add_cycles(
+    spark, stored_rdds, index_type
+):
+    """Each add supersedes the corpus, the index relations and the BM25
+    stats: over add + query cycles executor storage holds exactly one
+    corpus, one copy of each index relation and at most one stats set
+    (four cached relations), instead of one more per cycle."""
     import random
+
+    from pyspark.sql import DataFrame
 
     rng = random.Random(5)
     base = stored_rdds()
-    db = VectorDatabase(spark, dim=4, index_type="hnsw")
+    db = VectorDatabase(spark, dim=4, index_type=index_type)
     db.add(*_batch(rng, 12))
     q = [0.5, 0.5, 0.5, 0.5]
-    db.query_vector(q, top_k=3)  # builds the graph
+    db.query_vector(q, top_k=3)  # builds the index
     sizes = []
     for _ in range(3):
         db.add(*_batch(rng, 4))
@@ -746,9 +787,13 @@ def test_facade_storage_constant_across_add_cycles(spark, stored_rdds):
         sizes.append(len(stored_rdds() - base))
     assert sizes[0] == sizes[1] == sizes[2]
     held = stored_rdds() - base
-    corpus, graph = _rdd_id(db._df), _rdd_id(db._ann_index.graph)
-    assert {corpus, graph} <= held
-    assert len(held - {corpus, graph}) <= 4
+    index = {
+        _rdd_id(v) for v in vars(db._ann_index).values()
+        if isinstance(v, DataFrame)
+    }
+    corpus = _rdd_id(db._df)
+    assert {corpus} | index <= held
+    assert len(held - {corpus} - index) <= 4
 
 
 def _last_plan_nodes(monkeypatch, call) -> int:

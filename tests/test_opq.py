@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from homemade_vector_db_spark.operators import opq, pq
+from homemade_vector_db_spark.operators import opq, pq, tier
 from tests.conftest import SF_SMOKE
 
 
@@ -53,14 +53,14 @@ def test_opq_rotation_orthogonal_and_l2_invariant(spark, embs):
 
 
 def test_opq_search_equals_pq_on_rotated(spark, embs):
-    """Composition contract: opq_search(index, q) must equal running the
-    plain PQ ADC kernel on the driver-rotated query over the inner
+    """Composition contract: rotated_search(index, q) must equal running
+    the plain PQ ADC kernel on the driver-rotated query over the inner
     rotated-frame index — OPQ adds exactly one gemv, nothing else."""
     idx = opq.build_opq(embs, m=8, codebook_size=16, dim=64)
     q = [float(x) for x in embs.where(F.col("vec_id") == 0).first().embedding]
-    got = opq.opq_search(idx, q, k=10).collect()
+    got = opq.rotated_search(idx, q, k=10).collect()
     qr = idx.rotation @ (np.asarray(q) - idx.mean)
-    want = pq.pq_search(idx.pq_index, qr.tolist(), k=10).collect()
+    want = pq.pq_search(idx.inner, qr.tolist(), k=10).collect()
     assert [(r.vec_id, r.score) for r in got] == [
         (r.vec_id, r.score) for r in want
     ]
@@ -133,19 +133,19 @@ def test_ivfopq_add_equals_full_encode(spark, embs):
     base = embs.where(F.col("vec_id") < 300)
     late = embs.where(F.col("vec_id") >= 300)
     idx = opq.build_ivfopq(base, nlist=8, m=8, codebook_size=16, dim=64)
-    added = opq.ivfopq_add(idx, late, cache=False)
+    added = opq.rotated_add(idx, late)
 
     rotated_all = opq.rotate(embs, idx.mean, idx.rotation)
     want = {
         (r.vec_id, tuple(r.codes), r.cluster)
         for r in pqmod.encode_with_geometry(
-            rotated_all, idx.ivfpq.centroids, idx.ivfpq.pq.codebooks,
+            rotated_all, idx.inner.centroids, idx.inner.codebooks,
             64, "vec_id", "__rot",
         ).collect()
     }
     got = {
         (r.vec_id, tuple(r.codes), r.cluster)
-        for r in added.ivfpq.codes_with_cluster.collect()
+        for r in added.inner.codes.collect()
     }
     assert got == want and len(got) == embs.count()
 
@@ -157,25 +157,23 @@ def test_ivfopq_rerank_recall_and_roundtrip(spark, embs, tmp_path):
 
     idx = opq.build_ivfopq(embs, nlist=8, m=8, codebook_size=16, dim=64)
     q = [float(x) for x in embs.where(F.col("vec_id") == 0).first().embedding]
-    approx = {
-        r.vec_id
-        for r in opq.ivfopq_rerank_search(
-            idx, embs, q, k=10, nprobe=8, overfetch=8
-        ).collect()
-    }
+    shortlist = opq.rotated_search(
+        idx, q, k=80, nprobe=8, score_decimals=None
+    )
+    approx = {r.vec_id for r in tier.rerank(shortlist, embs, q, 10).collect()}
     exact = {r.vec_id for r in knn_exact(embs, q, k=10, dim=64).collect()}
     assert len(approx & exact) >= 5  # the shared 0.5 gate floor
 
     path = str(tmp_path / "ivfopq")
-    opq.save_ivfopq(idx, path)
-    loaded = opq.load_ivfopq(spark, path)
+    tier.save_index(idx, path)
+    loaded = tier.load_index(spark, path)
     s1 = sorted(
         (r.vec_id, r.score)
-        for r in opq.ivfopq_search(idx, q, k=10, nprobe=8).collect()
+        for r in opq.rotated_search(idx, q, k=10, nprobe=8).collect()
     )
     s2 = sorted(
         (r.vec_id, r.score)
-        for r in opq.ivfopq_search(loaded, q, k=10, nprobe=8).collect()
+        for r in opq.rotated_search(loaded, q, k=10, nprobe=8).collect()
     )
     assert s1 == s2
 
@@ -263,7 +261,7 @@ def test_opq_beats_pq_on_anisotropic_data(spark):
     # rotated-frame reconstruction error IS original-frame error
     # (orthogonal invariance), so the comparison is apples-to-apples
     e_opq = recon_err(
-        oidx.pq_index.codes, oidx.pq_index.codebooks,
+        oidx.inner.codes, oidx.inner.codebooks,
         rot=oidx.rotation, mean=oidx.mean,
     )
     assert e_opq < e_pq * 0.8, (e_opq, e_pq)

@@ -168,14 +168,14 @@ def test_late_orders_plans_semi_join(spark):
 
 
 def test_loaded_ivf_probe_is_partition_pruning(spark, tmp_path_factory):
-    from homemade_vector_db_spark.operators import ann
+    from homemade_vector_db_spark.operators import ann, tier
     from homemade_vector_db_spark.sources.tables import load_embeddings
 
     embs = load_embeddings(spark, SF_SMOKE)
     idx = ann.build_ivf(embs, nlist=8, cache=False)
     root = str(tmp_path_factory.mktemp("ivfplan") / "idx")
-    ann.save_ivf(idx, root)
-    idx2 = ann.load_ivf(spark, root)
+    tier.save_index(idx, root)
+    idx2 = tier.load_index(spark, root)
     q = [0.0] * 64
     plan = physical_plan(ann.ivf_search(idx2, q, k=5, nprobe=2))
     # the nprobe cell filter must hit the cluster-partitioned parquet as

@@ -4,7 +4,7 @@ stance: approximate indexes are recall-tested, not hash-tested)."""
 import pytest
 from pyspark.sql import functions as F
 
-from homemade_vector_db_spark.operators import pq
+from homemade_vector_db_spark.operators import pq, tier
 from homemade_vector_db_spark.operators.knn import knn_exact
 from homemade_vector_db_spark.sources.tables import load_embeddings
 from tests.conftest import SF_SMOKE
@@ -42,7 +42,8 @@ def test_adc_recall_and_rerank(spark, embs, index, qvec):
     adc_recall = len(set(adc) & set(exact)) / 10
     assert adc_recall >= 0.5  # compressed-domain recall
 
-    rr = [r.vec_id for r in pq.pq_rerank_search(index, embs, qvec, k=10).collect()]
+    shortlist = pq.pq_search(index, qvec, k=40, score_decimals=None)
+    rr = [r.vec_id for r in tier.rerank(shortlist, embs, qvec, 10).collect()]
     rr_recall = len(set(rr) & set(exact)) / 10
     assert rr_recall >= adc_recall  # rerank can only improve
     assert rr_recall >= 0.8
@@ -62,14 +63,12 @@ def test_dim_not_divisible_raises(spark, embs):
 
 
 def test_pq_save_load_roundtrip(spark, embs, index, qvec, tmp_path):
-    from homemade_vector_db_spark.operators.pq import load_pq, pq_search, save_pq
-
-    want = [(r.vec_id, r.score) for r in pq_search(index, qvec, k=5).collect()]
+    want = [(r.vec_id, r.score) for r in pq.pq_search(index, qvec, k=5).collect()]
     path = str(tmp_path / "pq_idx")
-    save_pq(index, path)
-    loaded = load_pq(spark, path)
+    tier.save_index(index, path)
+    loaded = tier.load_index(spark, path)
     assert loaded.m == index.m and loaded.dim == index.dim
-    got = [(r.vec_id, r.score) for r in pq_search(loaded, qvec, k=5).collect()]
+    got = [(r.vec_id, r.score) for r in pq.pq_search(loaded, qvec, k=5).collect()]
     assert got == want  # ADC is deterministic given codes + codebooks
 
 
@@ -99,9 +98,10 @@ def test_ivfpq_residual_recall_and_rerank(spark):
     assert len(set(got) & set(exact)) / 10 >= 0.2
 
     # rerank: exact arithmetic on the shortlist only
+    shortlist = pq.ivfpq_search(idx, q, k=40, nprobe=4, score_decimals=None)
     rr = [
         (r.vec_id, r.score)
-        for r in pq.ivfpq_rerank_search(idx, embs, q, k=10, nprobe=4).collect()
+        for r in tier.rerank(shortlist, embs, q, 10).collect()
     ]
     pool = {
         r.vec_id
@@ -134,9 +134,9 @@ def test_ivfpq_save_load_roundtrip(spark, embs, qvec, tmp_path):
         for r in pq.ivfpq_search(idx, qvec, k=5, nprobe=3).collect()
     ]
     path = str(tmp_path / "ivfpq_idx")
-    pq.save_ivfpq(idx, path)
-    loaded = pq.load_ivfpq(spark, path)
-    assert loaded.pq.m == idx.pq.m and loaded.pq.dim == idx.pq.dim
+    tier.save_index(idx, path)
+    loaded = tier.load_index(spark, path)
+    assert loaded.m == idx.m and loaded.dim == idx.dim
     assert loaded.centroids == idx.centroids
     got = [
         (r.vec_id, r.score)

@@ -197,7 +197,7 @@ def test_repr(spark):
     db.add(TEST_DOCS, TEST_VECTORS)
     rep = repr(db)
     assert str(TEST_DIM) in rep
-    assert db.index_type in rep  # 'hnsw' aliases to the lsh tier
+    assert db.index_type in rep  # 'hnsw' aliases to the nsw graph tier
     assert str(len(TEST_DOCS)) in rep
 
 

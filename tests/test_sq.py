@@ -4,7 +4,7 @@ stance as PQ/ANN (reference test_local_db.py:155-157)."""
 import pytest
 from pyspark.sql import functions as F
 
-from homemade_vector_db_spark.operators import sq
+from homemade_vector_db_spark.operators import sq, tier
 from homemade_vector_db_spark.operators.knn import knn_exact
 from homemade_vector_db_spark.sources.tables import load_embeddings
 from tests.conftest import SF_SMOKE
@@ -40,7 +40,9 @@ def test_sq_rerank_equals_exact_on_contained_pool(spark, embs, qvec):
     assert {v for v, _ in exact} <= pool
     got = [
         (r.vec_id, r.score)
-        for r in sq.sq_rerank_search(idx, embs, qvec, k=10, pool=100).collect()
+        for r in tier.rerank(
+            sq.sq_search(idx, qvec, k=100, score_decimals=None), embs, qvec, 10
+        ).collect()
     ]
     assert got == exact
 
@@ -79,8 +81,8 @@ def test_sq_constant_dimension(spark):
 def test_sq_save_load_roundtrip(spark, embs, qvec, tmp_path):
     idx = sq.build_sq(embs, dim=64)
     want = [(r.vec_id, r.score) for r in sq.sq_search(idx, qvec, k=10).collect()]
-    sq.save_sq(idx, str(tmp_path / "sqidx"))
-    idx2 = sq.load_sq(spark, str(tmp_path / "sqidx"))
+    tier.save_index(idx, str(tmp_path / "sqidx"))
+    idx2 = tier.load_index(spark, str(tmp_path / "sqidx"))
     assert idx2.mins == idx.mins and idx2.scales == idx.scales
     got = [(r.vec_id, r.score) for r in sq.sq_search(idx2, qvec, k=10).collect()]
     assert got == want
@@ -96,5 +98,6 @@ def test_sq_add_after_train(spark, embs, qvec):
     grown = sq.sq_add(idx, rest)
     assert grown.mins == idx.mins and grown.scales == idx.scales
     assert grown.codes.count() == embs.count()
-    top = sq.sq_rerank_search(grown, embs, qvec, k=1).collect()[0]
+    shortlist = sq.sq_search(grown, qvec, k=100, score_decimals=None)
+    top = tier.rerank(shortlist, embs, qvec, 1).collect()[0]
     assert top.vec_id == 0 and top.score == 1.0

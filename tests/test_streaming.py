@@ -1187,20 +1187,20 @@ def test_incremental_pq_index_twin_laws(spark, tmp_path):
     # the partitioned parquet roundtrip) equals the batch-mode operator
     # merge ivfpq_add(seed_index, late) row for row
     seed_codes = spark.read.parquet(str(tmp_path / "pqidx/codes/batch=seed"))
-    merged = pq.ivfpq_add(ipq._index(seed_codes), late, cache=False)
+    merged = pq.ivfpq_add(ipq._index(seed_codes), late)
     want = {
         (r.vec_id, tuple(r.codes), r.cluster)
-        for r in merged.codes_with_cluster.collect()
+        for r in merged.codes.collect()
     }
     got = {
         (r.vec_id, tuple(r.codes), r.cluster)
-        for r in ipq.index().codes_with_cluster.collect()
+        for r in ipq.index().codes.collect()
     }
     assert got == want and len(got) == 140
 
     # replay idempotency: re-delivering batch 0 leaves one copy
     ipq.ingest_batch(late, 0)
-    assert ipq.index().codes_with_cluster.count() == 140
+    assert ipq.index().codes.count() == 140
 
     # search: exact rerank against the caller's vector table — an exact
     # self-match must surface with score 1.0 under a full probe
@@ -1211,7 +1211,7 @@ def test_incremental_pq_index_twin_laws(spark, tmp_path):
 
 def test_incremental_opq_index_twin_laws(spark, tmp_path):
     """IncrementalOPQIndex (round 13): per-batch codes under the FROZEN
-    rotation + geometry equal opq.ivfopq_add's codes for the same rows
+    rotation + geometry equal opq.rotated_add's codes for the same rows
     (twin law); replayed batches overwrite their own dir (idempotency);
     search reranks exactly in the original frame."""
     from homemade_vector_db_spark.operators import opq
@@ -1228,24 +1228,24 @@ def test_incremental_opq_index_twin_laws(spark, tmp_path):
     iopq.ingest_batch(late, 0)
 
     # twin law: streamed state (seed dir + batch dir, through the
-    # partitioned parquet roundtrip) == batch-mode ivfopq_add merge
+    # partitioned parquet roundtrip) == batch-mode rotated_add merge
     seed_codes = spark.read.parquet(
         str(tmp_path / "opqidx/codes/batch=seed")
     )
-    merged = opq.ivfopq_add(iopq._index(seed_codes), late, cache=False)
+    merged = opq.rotated_add(iopq._index(seed_codes), late)
     want = {
         (r.vec_id, tuple(r.codes), r.cluster)
-        for r in merged.ivfpq.codes_with_cluster.collect()
+        for r in merged.inner.codes.collect()
     }
     got = {
         (r.vec_id, tuple(r.codes), r.cluster)
-        for r in iopq.index().ivfpq.codes_with_cluster.collect()
+        for r in iopq.index().inner.codes.collect()
     }
     assert got == want and len(got) == 140
 
     # replay idempotency
     iopq.ingest_batch(late, 0)
-    assert iopq.index().ivfpq.codes_with_cluster.count() == 140
+    assert iopq.index().inner.codes.count() == 140
 
     # search: exact original-frame rerank — a self-match surfaces at 1.0
     target = embs.where("vec_id = 120").first()
